@@ -10,8 +10,8 @@ import math
 SUM_RTOL = 1e-9
 
 
-def _close(a: float, b: float, rtol: float = SUM_RTOL) -> bool:
-    return math.isclose(a, b, rel_tol=rtol, abs_tol=rtol)
+def _close(a: float, b: float) -> bool:
+    return math.isclose(a, b, rel_tol=SUM_RTOL, abs_tol=SUM_RTOL)
 
 
 def check_snapshot(actual: dict, expected: dict) -> list[str]:

@@ -5,7 +5,7 @@ through the code under test:
 
 - :class:`KlineSource` is the ``page_fn`` handed to ``Pipeline(page_fn=...)``.
   It is picklable and importable by Spark's Python workers. Each page
-  re-sends the last ``overlap`` bars before the requested start with
+  re-sends the last ``OVERLAP`` bars before the requested start with
   revised values, so keep-last dedup always has winners to pick.
 - :class:`KlineModel` replays the fetch protocol over the same source and
   keeps the last value per key, which is what the warehouse must serve.
@@ -33,6 +33,13 @@ INTERVAL = "1m"
 #: (page_limit, budget_calls) the pipeline passes to the fetcher per market
 FETCH_LIMITS = {SPOT: (1000, 2750), PERP: (499, 1150)}
 WEIGHT_PER_CALL = 2
+#: bars before the requested start that every page re-sends, revised
+OVERLAP = 5
+#: PageRank iterations and damping of ``operators.graph.pagerank``'s defaults
+PAGERANK_ITERS, DAMPING = 3, 0.85
+#: tokens per shingle (``minhash_lsh_pairs``' default ``k``) and per document
+SHINGLE_K = 3
+DOC_LENGTH = 60
 
 _MASK = (1 << 64) - 1
 
@@ -72,9 +79,8 @@ class KlineSource:
     accumulators; the traced run passes it to count what the source served.
     """
 
-    def __init__(self, seed: int, overlap: int = 5, counters=None):
+    def __init__(self, seed: int, counters=None):
         self.seed = seed
-        self.overlap = overlap
         self.counters = counters
 
     def __call__(self, symbol: str, start_ms: int, end_ms: int, limit: int) -> list[list]:
@@ -90,7 +96,7 @@ class KlineSource:
 
     def page(self, symbol: str, start_ms: int, end_ms: int, limit: int) -> list[list]:
         req = max(0, -(-(start_ms - ORIGIN_MS) // MINUTE_MS))
-        first = max(0, req - self.overlap)
+        first = max(0, req - OVERLAP)
         out = []
         for bar in range(first, first + limit):
             ts = ORIGIN_MS + bar * MINUTE_MS
@@ -232,7 +238,7 @@ def planted_graph(seed: int, n_components: int, size: int):
     return sorted(edges), labels
 
 
-def pagerank_reference(edges: list[tuple[int, int]], iters: int = 3, damping: float = 0.85):
+def pagerank_reference(edges: list[tuple[int, int]]):
     """Plain-Python twin of ``operators.graph.pagerank`` on an undirected,
     unweighted edge list (unrounded)."""
     nbrs: dict[int, list[int]] = {}
@@ -241,32 +247,32 @@ def pagerank_reference(edges: list[tuple[int, int]], iters: int = 3, damping: fl
         nbrs.setdefault(b, []).append(a)
     n = len(nbrs)
     pr = {v: 1.0 / n for v in nbrs}
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         nxt = {v: 0.0 for v in nbrs}
         for u, vs in nbrs.items():
             share = pr[u] / len(vs)
             for v in vs:
                 nxt[v] += share
-        pr = {v: (1.0 - damping) / n + damping * s for v, s in nxt.items()}
+        pr = {v: (1.0 - DAMPING) / n + DAMPING * s for v, s in nxt.items()}
     return pr
 
 
-def shingle_set(text: str, k: int = 3) -> set[str]:
-    """The k-token shingles ``operators.texthash.shingles`` builds."""
+def shingle_set(text: str) -> set[str]:
+    """The ``SHINGLE_K``-token shingles ``operators.texthash.shingles`` builds."""
     w = text.split(" ")
-    return {" ".join(w[i:i + k]) for i in range(len(w) - k + 1)}
+    return {" ".join(w[i:i + SHINGLE_K]) for i in range(len(w) - SHINGLE_K + 1)}
 
 
-def jaccard(a: str, b: str, k: int = 3) -> float:
-    sa, sb = shingle_set(a, k), shingle_set(b, k)
+def jaccard(a: str, b: str) -> float:
+    sa, sb = shingle_set(a), shingle_set(b)
     inter = len(sa & sb)
     return inter / (len(sa) + len(sb) - inter)
 
 
-def planted_corpus(seed: int, n_groups: int, group_size: int, n_noise: int, length: int = 60):
-    """Documents ``(doc_id, text)``: ``n_groups`` groups of ``group_size``
-    near-duplicates (each member is the group's base text with one token
-    replaced) plus ``n_noise`` unrelated documents.
+def planted_corpus(seed: int, n_groups: int, group_size: int, n_noise: int):
+    """Documents ``(doc_id, text)`` of ``DOC_LENGTH`` tokens: ``n_groups``
+    groups of ``group_size`` near-duplicates (each member is the group's
+    base text with one token replaced) plus ``n_noise`` unrelated documents.
 
     Returns ``(docs, planted)`` where ``planted`` is the set of
     ``(d1, d2)`` pairs, ``d1 < d2``, of documents in the same group."""
@@ -278,14 +284,14 @@ def planted_corpus(seed: int, n_groups: int, group_size: int, n_noise: int, leng
     planted: set[tuple[int, int]] = set()
     pos = 0
     for _ in range(n_groups):
-        base = [rng.choice(vocab) for _ in range(length)]
+        base = [rng.choice(vocab) for _ in range(DOC_LENGTH)]
         members = ids[pos:pos + group_size]
         pos += group_size
         for d in members:
             words = list(base)
-            words[rng.randrange(length)] = rng.choice(vocab)
+            words[rng.randrange(DOC_LENGTH)] = rng.choice(vocab)
             docs.append((d, " ".join(words)))
         planted.update((a, b) for a in members for b in members if a < b)
     for d in ids[pos:]:
-        docs.append((d, " ".join(rng.choice(vocab) for _ in range(length))))
+        docs.append((d, " ".join(rng.choice(vocab) for _ in range(DOC_LENGTH))))
     return docs, planted

@@ -133,12 +133,10 @@ def _start_spark(run_dir: str, trace: bool):
 
     confs = {
         "spark.sql.warehouse.dir": os.path.join(run_dir, "spark-warehouse"),
-        # JVM temp files (native-library extraction) in the run directory,
-        # no hsperfdata file under /tmp, and the heap committed at full size
-        # from the start, so the peak RSS does not hinge on when it grew
+        # JVM temp files (native-library extraction) in the run directory
+        # and no hsperfdata file under /tmp
         "spark.driver.extraJavaOptions": (
-            f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')} -XX:-UsePerfData "
-            f"-Xms{DRIVER_MEM_MB}m"
+            f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')} -XX:-UsePerfData"
         ),
         "spark.ui.showConsoleProgress": "false",
     }
@@ -194,7 +192,7 @@ def end_to_end(run, peak_rss: int) -> dict[str, float]:
         "setup_s": run.setup_s,
         "peak_rss_mb": peak_rss / 2**20,
         "op_p50_ms": statistics.median(run.op_s) * 1000,
-        "ops_per_s": len(run.op_s) / sum(run.op_s),
+        "ops_per_s": len(run.op_s) / run.loop_s,
     }
 
 

@@ -44,9 +44,9 @@ def test_overlapping_pages_carry_revised_values():
     src = gen.KlineSource(3)
     first = src.page("SYM001USDT", gen.ORIGIN_MS, gen.ORIGIN_MS + gen.DAY_MS, 100)
     nxt = src.page("SYM001USDT", first[-1][0] + 1, gen.ORIGIN_MS + gen.DAY_MS, 100)
-    resent = {r[0]: r for r in nxt[: src.overlap]}
-    assert len(resent) == src.overlap
-    for r in first[-src.overlap:]:
+    resent = {r[0]: r for r in nxt[: gen.OVERLAP]}
+    assert len(resent) == gen.OVERLAP
+    for r in first[-gen.OVERLAP:]:
         assert resent[r[0]][4] != r[4]  # same bar, revised close
 
 
@@ -58,7 +58,7 @@ def test_model_keeps_the_last_fetched_value():
     new = [k for k in model.rows if k not in before]
     revised = [k for k in before if model.rows[k] != before[k]]
     assert len(new) == len(gen.perp_symbols(workloads.N_PERP)) * 60
-    assert len(revised) == len(gen.perp_symbols(workloads.N_PERP)) * model.source.overlap
+    assert len(revised) == len(gen.perp_symbols(workloads.N_PERP)) * gen.OVERLAP
 
 
 def test_model_replays_the_fetcher_pagination():

@@ -20,6 +20,10 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+#: seconds between two samples of the process tree's memory
+RSS_INTERVAL_S = 0.2
+
+
 @dataclass
 class Span:
     name: str
@@ -198,8 +202,7 @@ class RssSampler:
     """Background thread that samples the process tree's RSS and keeps the
     peak. Use as a context manager."""
 
-    def __init__(self, interval_s: float = 0.2):
-        self.interval_s = interval_s
+    def __init__(self):
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -208,7 +211,7 @@ class RssSampler:
         pid = os.getpid()
         while True:
             self.peak = max(self.peak, tree_rss_bytes(pid))
-            if self._stop.wait(self.interval_s):
+            if self._stop.wait(RSS_INTERVAL_S):
                 return
 
     def __enter__(self) -> "RssSampler":

@@ -9,6 +9,9 @@ records spans and the standalone per-layer values.
   an uncompacted warehouse, then connected components, PageRank and
   MinHash-LSH on planted inputs. The operation is one query, lookup or
   graph operation.
+
+Each workload times its set-up once, warms up untimed, then runs its loop;
+throughput is completed operations over the loop's wall time.
 """
 
 from __future__ import annotations
@@ -28,15 +31,17 @@ from perfbench.trace import Tracer
 
 # warehouse shape: 2 spot + 4 perp symbols of 1m bars
 N_SPOT, N_PERP = 4, 4
-BACKFILL_DAYS = 1
+BACKFILL_DAYS = 3
 FETCH_PARTITIONS = 4
 #: ingest: timed cycles per run, at least
-MIN_CYCLES = 2
+MIN_CYCLES = 3
 #: maintenance compacts a month once it holds this many files
 MAINTAIN_MIN_FILES = 4
 #: analytics: overlapping revision batches appended to the warehouse
 REVISIONS = 2
 REVISION_HOURS = 8
+#: analytics: passes over every query kind and market in a round
+QUERY_PASSES = 2
 #: analytics: hours a range query covers, rows per symbol of LIMIT n BY
 QUERY_HOURS = 4
 LIMIT_BY_N = 3
@@ -44,8 +49,6 @@ LIMIT_BY_N = 3
 GRAPH_COMPONENTS, GRAPH_SIZE = 400, 10
 DEDUP_GROUPS, DEDUP_GROUP_SIZE, DEDUP_NOISE = 150, 4, 300
 JACCARD_THRESHOLD = 0.5
-#: analytics builds its graph inputs this many times and reports the median
-SETUP_REPS = 3
 
 
 @dataclass
@@ -61,19 +64,18 @@ class Run:
     failed: int = 0
     setup_s: float = 0.0
     op_s: list[float] = field(default_factory=list)
+    #: wall time of the closed loop that ran the operations in ``op_s``
+    loop_s: float = 0.0
+    #: whether this is a traced run (set once, from the tracer)
+    traced: bool = field(init=False)
     #: standalone per-layer values (traced runs)
     layer: dict[str, float] = field(default_factory=dict)
     #: operation kind -> (untraced times, traced times); a traced run
     #: alternates the two so the tracing overhead can be measured
     samples: dict[str, tuple[list[float], list[float]]] = field(default_factory=dict)
 
-    @property
-    def traced(self) -> bool:
-        """Whether this is a traced run (set once, when the tracer is made)."""
-        return self._traced
-
     def __post_init__(self) -> None:
-        self._traced = self.tracer.enabled
+        self.traced = self.tracer.enabled
 
     @contextlib.contextmanager
     def tracing(self, on: bool):
@@ -83,7 +85,7 @@ class Run:
         try:
             yield
         finally:
-            self.tracer.enabled = self._traced
+            self.tracer.enabled = self.traced
 
     def attempt(self, what: str, fn, *args):
         """Run one operation; an exception counts as a failure and is
@@ -104,6 +106,14 @@ class Run:
             self.failed += 1
             for f in failures:
                 print(f"[perfbench] check {what} failed: {f}", file=sys.stderr)
+
+    def set_up(self, what: str, fn, *args):
+        """Run the set-up once and time it as ``setup_s``. Returns its
+        result, or ``None`` if it failed."""
+        t0 = time.perf_counter()
+        ok, result = self.attempt(what, fn, *args)
+        self.setup_s = time.perf_counter() - t0
+        return result if ok else None
 
     def timed(self, what: str, fn, *args) -> float | None:
         """Time one operation of the closed loop; ``None`` if it failed."""
@@ -211,16 +221,13 @@ def ingest(run: Run) -> None:
     if run.traced:
         counters = tuple(spark.sparkContext.accumulator(0) for _ in range(3))
     model = gen.KlineModel(gen.KlineSource(run.seed), N_SPOT, N_PERP)
+    _model_fetch(model, cfg.end_ms)
     p = Pipeline(spark, os.path.join(run.work_dir, "wh"), cfg,
-                 page_fn=gen.KlineSource(run.seed, counters=counters))
+                 page_fn=gen.KlineSource(run.seed, counters))
     _instrument(p, run.tracer)
 
     # set-up: an empty warehouse backfilled through update_all
-    _model_fetch(model, cfg.end_ms)
-    t0 = time.perf_counter()
-    ok, _ = run.attempt("backfill", p.update_all)
-    run.setup_s = time.perf_counter() - t0
-    if not ok:
+    if run.set_up("backfill", p.update_all) is None:
         return
 
     def cycle():
@@ -249,8 +256,9 @@ def ingest(run: Run) -> None:
         with run.tracing(traced):
             took = run.timed("cycle", cycle)
         if took is None:
-            return
+            break
         run.record("cycle", took, traced)
+    run.loop_s = time.perf_counter() - t_loop
 
     if run.traced:
         _storage_stats(run, p.klines)
@@ -361,9 +369,10 @@ def template_sql(kind: str, params: dict, twin: bool = False) -> str:
 
 
 def _point_predicates(params: dict) -> dict:
-    lo = dt.datetime.fromtimestamp(params["t0"] / 1000, dt.timezone.utc).replace(tzinfo=None)
-    hi = dt.datetime.fromtimestamp(params["t1"] / 1000, dt.timezone.utc).replace(tzinfo=None)
-    return {"symbol": ("eq", params["sym"]), "timestamp": ("between", lo, hi)}
+    return {
+        "symbol": ("eq", params["sym"]),
+        "timestamp": ("between", _utc(params["t0"]), _utc(params["t1"])),
+    }
 
 
 def _point_twin(params: dict) -> str:
@@ -407,9 +416,16 @@ def _append_revisions(run: Run, p) -> None:
         p.klines.append(batch, p.klines.max_ingest_seq(run.spark) + 1)
 
 
-def _warehouse(run: Run):
-    """The served warehouse: generated klines appended through the serving
-    table, funding rates through their pipeline stage, overlapping revision
+def _kline_rows(run: Run) -> list[tuple]:
+    """The generated klines a backfill would serve, as ``KLINES`` rows."""
+    model = gen.KlineModel(gen.KlineSource(run.seed), N_SPOT, N_PERP)
+    _model_fetch(model, _pipeline_config().end_ms)
+    return [_clean_row(sym, market, raw) for (sym, market, _), raw in model.rows.items()]
+
+
+def _warehouse(run: Run, rows: list[tuple]):
+    """The served warehouse: ``rows`` appended through the serving table,
+    funding rates through their pipeline stage, overlapping revision
     batches left uncompacted (so every ``FINAL`` read pays keep-last), the
     daily rollup refreshed, a zone map, and the views registered."""
     from binance_etl_clickhouse_spark import schemas
@@ -417,11 +433,7 @@ def _warehouse(run: Run):
     from binance_etl_clickhouse_spark.pipeline import Pipeline
 
     spark = run.spark
-    cfg = _pipeline_config()
-    model = gen.KlineModel(gen.KlineSource(run.seed), N_SPOT, N_PERP)
-    _model_fetch(model, cfg.end_ms)
-    rows = [_clean_row(sym, market, raw) for (sym, market, _), raw in model.rows.items()]
-    p = Pipeline(spark, os.path.join(run.work_dir, "wh"), cfg)
+    p = Pipeline(spark, os.path.join(run.work_dir, "wh"), _pipeline_config())
     p.klines.append(spark.createDataFrame(rows, schemas.KLINES), 1)
     p.update_funding_rates()
     _append_revisions(run, p)
@@ -434,25 +446,29 @@ def _warehouse(run: Run):
     return p, eng
 
 
-def _graph_inputs(run: Run):
-    """Planted graph and corpus as cached DataFrames, with what they must
-    yield."""
-    from pyspark.sql import functions as F
-
+def _planted(run: Run) -> dict:
+    """Planted graph and corpus, with what they must yield."""
     edges, labels = gen.planted_graph(run.seed, GRAPH_COMPONENTS, GRAPH_SIZE)
     docs, planted = gen.planted_corpus(run.seed, DEDUP_GROUPS, DEDUP_GROUP_SIZE, DEDUP_NOISE)
+    return {
+        "edge_list": edges, "labels": labels, "doc_rows": docs,
+        "texts": dict(docs), "planted": planted,
+    }
+
+
+def _graph_inputs(run: Run, planted: dict) -> dict:
+    """``planted`` with its graph and corpus loaded as cached DataFrames."""
+    from pyspark.sql import functions as F
+
     edf = (
-        run.spark.createDataFrame(edges, "src long, dst long")
+        run.spark.createDataFrame(planted["edge_list"], "src long, dst long")
         .withColumn("w", F.lit(1.0))
         .cache()
     )
-    ddf = run.spark.createDataFrame(docs, "doc_id long, text string").cache()
+    ddf = run.spark.createDataFrame(planted["doc_rows"], "doc_id long, text string").cache()
     edf.count()
     ddf.count()
-    return {
-        "edges": edf, "docs": ddf, "edge_list": edges, "labels": labels,
-        "texts": dict(docs), "planted": planted,
-    }
+    return {**planted, "edges": edf, "docs": ddf}
 
 
 def _components(run: Run, inp: dict, out: dict) -> None:
@@ -509,25 +525,16 @@ def analytics(run: Run) -> None:
     spark = run.spark
     tracer = run.tracer
 
-    # set-up: the warehouse once (it is the costly part), the graph inputs
-    # SETUP_REPS times (median)
-    t0 = time.perf_counter()
-    ok, state = run.attempt("warehouse set-up", _warehouse, run)
-    warehouse_s = time.perf_counter() - t0
-    if not ok:
+    bars, planted = _kline_rows(run), _planted(run)
+
+    def set_up():
+        p, eng = _warehouse(run, bars)
+        return p, eng, _graph_inputs(run, planted)
+
+    state = run.set_up("set-up", set_up)
+    if state is None:
         return
-    p, eng = state
-    inputs_s, inp = [], None
-    for _ in range(SETUP_REPS):
-        if inp is not None:
-            inp["edges"].unpersist()
-            inp["docs"].unpersist()
-        t0 = time.perf_counter()
-        ok, inp = run.attempt("graph set-up", _graph_inputs, run)
-        inputs_s.append(time.perf_counter() - t0)
-        if not ok:
-            return
-    run.setup_s = warehouse_s + statistics.median(inputs_s)
+    p, eng, inp = state
     reference = gen.pagerank_reference(inp["edge_list"])
     if run.traced:
         _storage_stats(run, p.klines)
@@ -575,13 +582,17 @@ def analytics(run: Run) -> None:
     rdds: list[int] = []
     n_files = len(zonemap.data_files(p.klines.path))
     zm = zonemap.read_zonemap(p.klines.path)
+    outs: list[dict] = []
     t_loop = time.perf_counter()
     rounds = 0
     while not run.loop_done(t_loop, rounds, 2 if run.traced else 1):
-        # a round issues every query kind once per market and then every
-        # graph operation, in a fixed order; a traced run traces every other
-        # operation, so each kind is timed both ways
-        plan = [(kind, query_params(rng, typ)) for typ in MARKETS for kind in KINDS]
+        # a round issues every query kind once per market, QUERY_PASSES
+        # times, and then every graph operation, in a fixed order; a traced
+        # run traces every other operation, so each kind is timed both ways
+        plan = [
+            (kind, query_params(rng, typ))
+            for _ in range(QUERY_PASSES) for typ in MARKETS for kind in KINDS
+        ]
         for j, (kind, params) in enumerate(plan):
             traced = run.traced and (rounds + j) % 2 == 1
             if traced and kind == POINT_LOOKUP:
@@ -608,13 +619,16 @@ def analytics(run: Run) -> None:
             if traced:
                 rdds.append(run.persistent_rdds())
         if complete:
-            _check_graph(run, inp, out, reference)
-            if run.traced:
-                run.layer["operators.graph.lsss_rounds"] = out["lsss_rounds"]
-                run.layer["operators.neardup.pairs"] = len(out["neardup"])
-                run.layer["operators.neardup.overflow_rows"] = out["overflow_rows"]
+            outs.append(out)
         rounds += 1
+    run.loop_s = time.perf_counter() - t_loop
 
+    for out in outs:
+        _check_graph(run, inp, out, reference)
+    if run.traced and outs:
+        run.layer["operators.graph.lsss_rounds"] = outs[-1]["lsss_rounds"]
+        run.layer["operators.neardup.pairs"] = len(outs[-1]["neardup"])
+        run.layer["operators.neardup.overflow_rows"] = outs[-1]["overflow_rows"]
     if run.traced:
         untraced = {k: run.samples[k][0] for k in KINDS}
         sql_s = [t for k in TEMPLATES for t in untraced[k]]
