@@ -35,8 +35,7 @@ DRIVER_MEM_MB = 2048
 END_TO_END = {
     "setup_s": "s",
     "peak_rss_mb": "MB",
-    "op_p50_ms": "ms",
-    "ops_per_s": "1/s",
+    "op_cpu_ms": "ms",
 }
 
 #: spans: one per call into a layer, reported as means per call
@@ -191,8 +190,7 @@ def end_to_end(run, peak_rss: int) -> dict[str, float]:
     return {
         "setup_s": run.setup_s,
         "peak_rss_mb": peak_rss / 2**20,
-        "op_p50_ms": statistics.median(run.op_s) * 1000,
-        "ops_per_s": len(run.op_s) / run.loop_s,
+        "op_cpu_ms": statistics.fmean(run.op_cpu_s) * 1000,
     }
 
 
@@ -245,6 +243,7 @@ def main(argv: list[str] | None = None) -> int:
         _pin_environment(run_dir)
         with trace.RssSampler() as rss:
             spark = _start_spark(run_dir, bool(args.trace))
+            workloads.log("session started")
             run = workloads.Run(
                 spark=spark,
                 tracer=trace.Tracer(spark.sparkContext, bool(args.trace)),
@@ -255,7 +254,8 @@ def main(argv: list[str] | None = None) -> int:
             workloads.WORKLOADS[args.workload](run)
         _stop_spark(spark)
         spark = None
-        if not run.op_s:
+        workloads.log("session stopped")
+        if not run.op_cpu_s:
             print("perfbench: no operation completed", file=sys.stderr)
             return 1
         if args.trace:

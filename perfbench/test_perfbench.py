@@ -10,12 +10,15 @@ import json
 import os
 import pickle
 import re
+import subprocess
+import sys
+import time
 from collections import deque
 
 import pytest
 
 from perfbench import checks, gen, run, workloads
-from perfbench.trace import Span, fold
+from perfbench.trace import Span, fold, tree_cpu_seconds
 
 NAME_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9_.-]{0,63}")
 UNIT_RE = re.compile(r"[A-Za-z0-9_/%.-]{1,16}")
@@ -254,6 +257,27 @@ def test_fold_charges_jobs_and_gaps_to_spans():
     assert (p["jobs"], p["tasks"]) == (3, 3)
     assert p["driver_gap_s"] == pytest.approx(10.0 - 3.5)
     assert p["self_s"] == pytest.approx(6.0)
+
+
+def test_cpu_clock_counts_descendants_not_idle_time():
+    # a child that spins for 0.5 s of CPU time, then sleeps until killed
+    busy = (
+        "import time\n"
+        "t = time.process_time()\n"
+        "while time.process_time() - t < 0.5: pass\n"
+        "print('done', flush=True)\n"
+        "time.sleep(60)\n"
+    )
+    c0 = tree_cpu_seconds(os.getpid())
+    child = subprocess.Popen([sys.executable, "-c", busy], stdout=subprocess.PIPE, text=True)
+    try:
+        assert child.stdout.readline().strip() == "done"
+        time.sleep(0.3)
+        spent = tree_cpu_seconds(os.getpid()) - c0
+    finally:
+        child.kill()
+        child.wait()
+    assert 0.45 <= spent < 1.5
 
 
 # ---------------------------------------------------------------- metric names

@@ -7,11 +7,12 @@ records spans and the standalone per-layer values.
   incremental cycles, then one maintenance pass. The operation is a cycle.
 - ``analytics``: ClickHouse-dialect queries and zone-map point lookups over
   an uncompacted warehouse, then connected components, PageRank and
-  MinHash-LSH on planted inputs. The operation is one query, lookup or
-  graph operation.
+  MinHash-LSH on planted inputs. The operation is a round: every query
+  kind on both markets, then every graph operation, in a fixed order.
 
-Each workload times its set-up once, warms up untimed, then runs its loop;
-throughput is completed operations over the loop's wall time.
+Each workload times its set-up once, warms up untimed, then runs its loop.
+Every timed call records its wall time and the CPU time the process tree
+spent on it; an operation's CPU time is the sum over its calls.
 """
 
 from __future__ import annotations
@@ -27,28 +28,37 @@ import traceback
 from dataclasses import dataclass, field
 
 from perfbench import checks, gen
-from perfbench.trace import Tracer
+from perfbench.trace import Tracer, tree_cpu_seconds
 
 # warehouse shape: 2 spot + 4 perp symbols of 1m bars
 N_SPOT, N_PERP = 4, 4
 BACKFILL_DAYS = 3
 FETCH_PARTITIONS = 4
-#: ingest: timed cycles per run, at least
+#: ingest: untimed warm-up cycles, then timed cycles per run, at least
+WARMUP_CYCLES = 2
 MIN_CYCLES = 3
 #: maintenance compacts a month once it holds this many files
 MAINTAIN_MIN_FILES = 4
 #: analytics: overlapping revision batches appended to the warehouse
 REVISIONS = 2
 REVISION_HOURS = 8
-#: analytics: passes over every query kind and market in a round
-QUERY_PASSES = 2
 #: analytics: hours a range query covers, rows per symbol of LIMIT n BY
 QUERY_HOURS = 4
 LIMIT_BY_N = 3
+#: analytics: timed rounds per run, at least
+MIN_ROUNDS = 1
 # analytics: planted graph and corpus
 GRAPH_COMPONENTS, GRAPH_SIZE = 400, 10
 DEDUP_GROUPS, DEDUP_GROUP_SIZE, DEDUP_NOISE = 150, 4, 300
 JACCARD_THRESHOLD = 0.5
+
+
+_T0 = time.perf_counter()
+
+
+def log(msg: str) -> None:
+    """One progress line on stderr, stamped with the seconds since start."""
+    print(f"[perfbench {time.perf_counter() - _T0:7.2f}] {msg}", file=sys.stderr)
 
 
 @dataclass
@@ -63,9 +73,8 @@ class Run:
     attempted: int = 0
     failed: int = 0
     setup_s: float = 0.0
-    op_s: list[float] = field(default_factory=list)
-    #: wall time of the closed loop that ran the operations in ``op_s``
-    loop_s: float = 0.0
+    #: CPU time of every completed operation (a cycle or a round)
+    op_cpu_s: list[float] = field(default_factory=list)
     #: whether this is a traced run (set once, from the tracer)
     traced: bool = field(init=False)
     #: standalone per-layer values (traced runs)
@@ -73,6 +82,9 @@ class Run:
     #: operation kind -> (untraced times, traced times); a traced run
     #: alternates the two so the tracing overhead can be measured
     samples: dict[str, tuple[list[float], list[float]]] = field(default_factory=dict)
+
+    #: the benchmark's process, root of the tree whose CPU time is measured
+    pid: int = field(init=False, default_factory=os.getpid)
 
     def __post_init__(self) -> None:
         self.traced = self.tracer.enabled
@@ -95,7 +107,7 @@ class Run:
             return True, fn(*args)
         except Exception:  # noqa: BLE001 — a failed operation is a measured outcome
             self.failed += 1
-            print(f"[perfbench] {what} failed:", file=sys.stderr)
+            log(f"{what} failed:")
             traceback.print_exc()
             return False, None
 
@@ -105,7 +117,7 @@ class Run:
         if failures:
             self.failed += 1
             for f in failures:
-                print(f"[perfbench] check {what} failed: {f}", file=sys.stderr)
+                log(f"check {what} failed: {f}")
 
     def set_up(self, what: str, fn, *args):
         """Run the set-up once and time it as ``setup_s``. Returns its
@@ -113,18 +125,21 @@ class Run:
         t0 = time.perf_counter()
         ok, result = self.attempt(what, fn, *args)
         self.setup_s = time.perf_counter() - t0
+        log(f"set-up {self.setup_s:.3f} s")
         return result if ok else None
 
-    def timed(self, what: str, fn, *args) -> float | None:
-        """Time one operation of the closed loop; ``None`` if it failed."""
-        t0 = time.perf_counter()
+    def timed(self, what: str, fn, *args) -> tuple[float, float] | None:
+        """Wall and CPU time of one call of the closed loop; ``None`` if it
+        failed."""
+        c0, t0 = tree_cpu_seconds(self.pid), time.perf_counter()
         ok, _ = self.attempt(what, fn, *args)
-        return time.perf_counter() - t0 if ok else None
+        took = time.perf_counter() - t0, tree_cpu_seconds(self.pid) - c0
+        return took if ok else None
 
-    def record(self, kind: str, took: float, traced: bool) -> None:
-        print(f"[perfbench] {kind} {took:.3f} s{' traced' if traced else ''}", file=sys.stderr)
-        self.op_s.append(took)
-        self.samples.setdefault(kind, ([], []))[traced].append(took)
+    def record(self, kind: str, took: tuple[float, float], traced: bool) -> None:
+        wall, cpu = took
+        log(f"{kind} {wall:.3f} s, cpu {cpu:.3f} s{' traced' if traced else ''}")
+        self.samples.setdefault(kind, ([], []))[traced].append(wall)
 
     def loop_done(self, t_start: float, n: int, min_n: int) -> bool:
         return n >= min_n and time.perf_counter() - t_start >= self.seconds
@@ -242,27 +257,30 @@ def ingest(run: Run) -> None:
         cfg.end_ms += gen.HOUR_MS
         _model_fetch(model, cfg.end_ms)
 
-    # warm-up: the first cycle runs the incremental fetch path cold
-    next_hour()
+    # warm-up: the first cycles run the incremental fetch path cold
     with run.tracing(False):
-        if not run.attempt("warm-up cycle", cycle)[0]:
-            return
+        for _ in range(WARMUP_CYCLES):
+            next_hour()
+            if not run.attempt("warm-up cycle", cycle)[0]:
+                return
+    log("warm-up done")
 
     t_loop = time.perf_counter()
     # a traced run alternates untraced, traced, untraced cycles
-    while not run.loop_done(t_loop, len(run.op_s), MIN_CYCLES + run.traced):
+    while not run.loop_done(t_loop, len(run.op_cpu_s), MIN_CYCLES + run.traced):
         next_hour()
-        traced = run.traced and len(run.op_s) % 2 == 1
+        traced = run.traced and len(run.op_cpu_s) % 2 == 1
         with run.tracing(traced):
             took = run.timed("cycle", cycle)
         if took is None:
             break
         run.record("cycle", took, traced)
-    run.loop_s = time.perf_counter() - t_loop
+        run.op_cpu_s.append(took[1])
 
     if run.traced:
         _storage_stats(run, p.klines)
     run.attempt("maintain", p.maintain, MAINTAIN_MIN_FILES)
+    log("maintain done")
     run.check("ingest.snapshot", checks.check_snapshot(_snapshot(spark, p), model.rows))
     run.check("ingest.rollup", checks.check_daily(_daily(spark, p), model.daily()))
     if run.traced:
@@ -526,6 +544,7 @@ def analytics(run: Run) -> None:
     tracer = run.tracer
 
     bars, planted = _kline_rows(run), _planted(run)
+    log("inputs generated")
 
     def set_up():
         p, eng = _warehouse(run, bars)
@@ -556,11 +575,13 @@ def analytics(run: Run) -> None:
             return point_lookup(params)
         return sql_query(template_sql(kind, params))
 
-    # warm-up, checked: every query kind against its plain-SQL twin, then
-    # one pass of the graph operations
+    # warm-up: every query kind on both markets, each kind checked on one
+    # of them against its plain-SQL twin, then one pass of the graph
+    # operations
     rng = random.Random(run.seed)
     with run.tracing(False):
         for i, kind in enumerate(KINDS):
+            run.attempt(kind, query, kind, query_params(rng, MARKETS[1 - i % 2]))
             params = query_params(rng, MARKETS[i % 2])
             ok, rows = run.attempt(kind, query, kind, params)
             if not ok:
@@ -577,6 +598,7 @@ def analytics(run: Run) -> None:
         if all(run.attempt(name, fn, run, inp, out)[0] for name, fn in GRAPH_OPS.items()):
             _check_graph(run, inp, out, reference)
 
+    log("warm-up done")
     translate_s: list[float] = []
     kept_frac: list[float] = []
     rdds: list[int] = []
@@ -585,14 +607,12 @@ def analytics(run: Run) -> None:
     outs: list[dict] = []
     t_loop = time.perf_counter()
     rounds = 0
-    while not run.loop_done(t_loop, rounds, 2 if run.traced else 1):
-        # a round issues every query kind once per market, QUERY_PASSES
-        # times, and then every graph operation, in a fixed order; a traced
-        # run traces every other operation, so each kind is timed both ways
-        plan = [
-            (kind, query_params(rng, typ))
-            for _ in range(QUERY_PASSES) for typ in MARKETS for kind in KINDS
-        ]
+    while not run.loop_done(t_loop, rounds, MIN_ROUNDS + run.traced):
+        # a round runs every query kind once per market and then every
+        # graph operation, in a fixed order; a traced run traces every
+        # other operation, so each kind is timed both ways
+        plan = [(kind, query_params(rng, typ)) for typ in MARKETS for kind in KINDS]
+        round_cpu: list[float] = []
         for j, (kind, params) in enumerate(plan):
             traced = run.traced and (rounds + j) % 2 == 1
             if traced and kind == POINT_LOOKUP:
@@ -606,25 +626,29 @@ def analytics(run: Run) -> None:
                 took = run.timed(kind, query, kind, params)
             if took is not None:
                 run.record(kind, took, traced)
+                round_cpu.append(took[1])
         out = {}
-        complete = True
+        graph_ok = True
         for j, (name, fn) in enumerate(GRAPH_OPS.items(), start=len(plan)):
             traced = run.traced and (rounds + j) % 2 == 1
             with run.tracing(traced):
                 took = run.timed(name, fn, run, inp, out)
             if took is None:
-                complete = False
+                graph_ok = False
                 continue
             run.record(name, took, traced)
+            round_cpu.append(took[1])
             if traced:
                 rdds.append(run.persistent_rdds())
-        if complete:
+        if graph_ok:
             outs.append(out)
+        if len(round_cpu) == len(plan) + len(GRAPH_OPS):
+            run.op_cpu_s.append(sum(round_cpu))
         rounds += 1
-    run.loop_s = time.perf_counter() - t_loop
 
     for out in outs:
         _check_graph(run, inp, out, reference)
+    log("checks done")
     if run.traced and outs:
         run.layer["operators.graph.lsss_rounds"] = outs[-1]["lsss_rounds"]
         run.layer["operators.neardup.pairs"] = len(outs[-1]["neardup"])
