@@ -1241,6 +1241,47 @@ def _rewrite_limit_offset(sql: str) -> str:
     return sql
 
 
+#: an ORDER BY item's trailing direction / null ordering
+_ORDER_SUFFIX = re.compile(r"(?i)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?\s*$")
+
+
+def _carry_order_columns(select: str, order_exprs: str) -> tuple[str, str, list[str]]:
+    """ClickHouse lets ORDER BY name a column the SELECT list drops, but the
+    LIMIT BY wrapper orders OUTSIDE that list. Each ORDER BY item that is
+    not a select item, alias or position is computed inside the list as a
+    hidden ``__lb_o<i>`` column, and the wrapper orders by (then projects
+    away) those. Returns ``(select, order_exprs, hidden names)``; a
+    ``*`` list, DISTINCT or a set operation is left as it was (an extra
+    column would change what DISTINCT or the set operation compares)."""
+    toks = _top_level_keyword_spans(select)
+    words = [t[2] for t in toks]
+    frm = next((t[0] for t in toks if t[2] == "FROM"), len(select))
+    if words.count("SELECT") != 1 or {"DISTINCT", "UNION", "INTERSECT", "EXCEPT"} & set(words):
+        return select, order_exprs, []
+    items = _split_args(select[toks[words.index("SELECT")][1] : frm])
+    if any(it.strip().endswith("*") for it in items):
+        return select, order_exprs, []
+    names = {it.strip().lower() for it in items} | {
+        it.split()[-1].strip("`").lower() for it in items
+    }
+    carried: dict[str, str] = {}  # hidden name -> expression
+    parts = []
+    for part in _split_args(order_exprs):
+        part = part.strip()
+        m = _ORDER_SUFFIX.search(part)
+        expr, suffix = part[: m.start()], part[m.start() :]
+        if expr.lower() in names or expr.isdigit():
+            parts.append(part)
+            continue
+        name = f"__lb_o{len(carried)}"
+        carried[name] = expr
+        parts.append(name + suffix)
+    if carried:
+        extra = ", ".join(f"{e} AS {n}" for n, e in carried.items())
+        select = f"{select[:frm].rstrip()}, {extra} {select[frm:]}".rstrip()
+    return select, ", ".join(parts), list(carried)
+
+
 def _rewrite_limit_by(sql: str) -> str:
     """``... [ORDER BY o] LIMIT [m,] n [OFFSET m] BY c1, c2 [LIMIT k]`` ->
     a row_number window per (c1, c2) keeping rows m+1..m+n (following the
@@ -1320,6 +1361,9 @@ def _rewrite_limit_by(sql: str) -> str:
         if nxt and nxt[2] == "BY":
             order_exprs = sql[nxt[1] : toks[hit][0]].strip()
             prefix = sql[: o[0]].rstrip()
+    hidden: list[str] = []
+    if order_exprs:
+        prefix, order_exprs, hidden = _carry_order_columns(prefix, order_exprs)
     win_order = order_exprs if order_exprs else cols
     keep = (
         f"__lb_rn <= {n_rows}"
@@ -1327,7 +1371,7 @@ def _rewrite_limit_by(sql: str) -> str:
         else f"__lb_rn > {offset} AND __lb_rn <= {offset + n_rows}"
     )
     out = (
-        f"SELECT * EXCEPT (__lb_rn) FROM ("
+        f"SELECT * EXCEPT ({', '.join(['__lb_rn', *hidden])}) FROM ("
         f"SELECT *, row_number() OVER (PARTITION BY {cols} ORDER BY {win_order}) "
         f"AS __lb_rn FROM ({prefix}) __lb_src) __lb WHERE {keep}"
     )

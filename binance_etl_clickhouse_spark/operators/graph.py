@@ -23,17 +23,19 @@ Scale notes (100 TB lens):
   a<b<c id-ordering; the counts provably agree, so the driver hash-check
   cross-validates the oriented implementation against the textbook one.
 - ``pagerank`` unrolls a FIXED number of power iterations as one declarative
-  plan; the edge + degree frames are cached (reused every iteration) and
-  each iteration is one shuffle (groupBy dst). At real scale you checkpoint
+  plan; the edge frame carries each edge's rank share (degree joined in
+  once) and is cached, so each iteration is one join with the rank frame
+  and one shuffle (groupBy dst). At real scale you checkpoint
   the rank frame every few iterations to truncate lineage; with a fixed
   small iteration count the lineage is bounded and Catalyst handles it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from binance_etl_clickhouse_spark.checkpoints import release
 from binance_etl_clickhouse_spark.operators.parallel import compact_persist
 
 DAMPING = 0.85
@@ -219,6 +221,32 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     return per_edge.agg(F.coalesce(F.sum("t"), F.lit(0)).cast("long").alias("n_triangles"))
 
 
+def _share_edges(edges: DataFrame, weighted: bool) -> tuple[DataFrame, int]:
+    """PageRank's persisted edge frame ``(u, v, share)`` and |V|.
+
+    ``share`` is the fraction of u's rank that flows to v: ``w / d(u)``
+    over the weighted degree, or ``1 / d(u)`` over the degree. The degree
+    is broadcast-joined onto the edges ONCE, here, so a power iteration is
+    one join against the rank frame plus one aggregate — no degree
+    broadcast per iteration. The symmetrized edges are persisted only
+    while the share frame is built, so the (possibly expensive) edge plan
+    runs once.
+    """
+    und = compact_persist(undirected(edges))
+    deg = und.groupBy("u").agg(
+        (F.sum("w") if weighted else F.count("*")).cast("double").alias("d")
+    )
+    share = (F.col("w") if weighted else F.lit(1.0)) / F.col("d")
+    e = compact_persist(
+        und.join(F.broadcast(deg), "u").select("u", "v", share.alias("share"))
+    )
+    # each vertex's shares sum to 1, so their total is |V| — and this job
+    # materializes the share frame, after which `und` has no reader
+    n = round(e.agg(F.sum("share")).first()[0])
+    und.unpersist()
+    return e, n
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -229,47 +257,37 @@ def pagerank(
 
     Every vertex has degree >= 1 by construction (it appears on an edge), so
     there is no dangling mass and the per-iteration update is exactly
-    ``pr' = (1-d)/N + d * sum_in pr/deg``. With ``weighted=True`` the flow
-    is proportional to edge weight (``pr * w / weighted_degree``) — same
-    plan, weighted degree table instead of the count. Returns
-    (part_key, pagerank) rounded to 6 dp for the cross-engine hash.
+    ``pr' = (1-d)/N + d * sum_in pr * share`` with ``share = 1/deg`` — or
+    ``w / weighted_degree`` with ``weighted=True``, so flow is proportional
+    to edge weight. Returns (part_key, pagerank) rounded to 6 dp for the
+    cross-engine hash.
+
+    Round shape: the degree is folded into the persisted edge frame once
+    (:func:`_share_edges`). The first iteration starts from the uniform
+    1/N and needs no join; each later one is one join of the edge frame
+    with the |V|-row rank frame (AQE broadcasts the rank frame) plus one
+    groupBy(v) shuffle.
     """
-    # und/deg are re-read every iteration — persist them (memory bounded by
-    # the edge list; at real scale this is the frame you'd also checkpoint).
-    # MEASURED (r11): a pre-partitioned+sorted edges-with-degree layout
-    # that lets every iteration's sort-merge join stream the big side was
-    # tried and is +26% WALL locally — AQE already broadcasts the |V|-row
-    # rank frame each iteration, so the edge side is never shuffled here,
-    # and the upfront exchange+sort is pure cost at 3 iterations. On a
-    # cluster where the rank frame outgrows broadcast, that layout
-    # (edges ⋈ degree, hash-clustered and sorted by source) is the right
+    if iters < 1:
+        raise ValueError("pagerank needs iters >= 1")
+    # MEASURED (r11): a pre-partitioned+sorted edge layout that lets every
+    # iteration's sort-merge join stream the big side was +26% WALL
+    # locally — the broadcast rank frame already keeps the edge side
+    # unshuffled, and the upfront exchange+sort is pure cost at 3
+    # iterations. On a cluster where the rank frame outgrows broadcast,
+    # that layout (hash-clustered and sorted by source) is the right
     # shape — revisit when iters ~ 10+ or |V| rows exceed the broadcast cap.
-    und = compact_persist(
-        undirected(edges).select("u", "v", "w")
-        if weighted
-        else undirected(edges).select("u", "v")
-    )
-    deg = compact_persist(
-        und.groupBy("u").agg(
-            (F.sum("w") if weighted else F.count("*")).cast("double").alias("d")
-        )
-    )
-    n = deg.count()  # |V| — one scalar, the only driver-side value
-    pr = deg.select("u", F.lit(1.0 / n).alias("pr"))
-    flow = (F.col("pr") * F.col("w") if weighted else F.col("pr")) / F.col("d")
+    e, n = _share_edges(edges, weighted)  # n = |V|, the only driver-side value
+    pr = None
     for _ in range(iters):
-        pr = (
-            und.join(pr, "u")
-            .join(F.broadcast(deg), "u")
-            .groupBy(F.col("v").alias("u"))
-            .agg(
-                (F.lit((1.0 - damping) / n) + F.lit(damping) * F.sum(flow)).alias(
-                    "pr"
-                )
-            )
+        src, rank = (e, F.lit(1.0 / n)) if pr is None else (e.join(pr, "u"), F.col("pr"))
+        pr = src.groupBy(F.col("v").alias("u")).agg(
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.sum(rank * F.col("share"))
+            ).alias("pr")
         )
-    out = pr.select(F.col("u").alias("part_key"), F.round("pr", 6).alias("pagerank"))
-    return out
+    return pr.select(F.col("u").alias("part_key"), F.round("pr", 6).alias("pagerank"))
 
 
 def personalized_pagerank(
@@ -282,27 +300,27 @@ def personalized_pagerank(
     set (one column ``u``) instead of the uniform vector — the
     recommendation/expansion primitive ("parts related to THESE parts").
 
-    Same execution envelope as :func:`pagerank` — one shuffle per
-    iteration, broadcast degree and seed frames; vertices unreachable from
-    the seeds converge to 0 and are kept (their score is an answer too).
+    Same edge frame as :func:`pagerank` (degree folded into ``share``
+    once); each iteration is one join + one shuffle plus the broadcast seed
+    frame. Vertices unreachable from the seeds converge to 0 and are kept
+    (their score is an answer too).
     """
-    und = compact_persist(undirected(edges).select("u", "v"))
-    deg = compact_persist(und.groupBy("u").agg(F.count("*").cast("double").alias("d")))
+    e, _ = _share_edges(edges, weighted=False)
+    verts = e.select("u").distinct()
     seed_flag = seeds.select("u").distinct().withColumn("is_seed", F.lit(1.0))
     n_seeds = seed_flag.count()
     base = F.coalesce(F.col("is_seed"), F.lit(0.0)) / n_seeds
-    pr = deg.join(F.broadcast(seed_flag), "u", "left").select(
+    pr = verts.join(F.broadcast(seed_flag), "u", "left").select(
         "u", base.alias("pr")
     )
     for _ in range(iters):
         flowed = (
-            und.join(pr, "u")
-            .join(F.broadcast(deg), "u")
+            e.join(pr, "u")
             .groupBy(F.col("v").alias("u"))
-            .agg((F.lit(damping) * F.sum(F.col("pr") / F.col("d"))).alias("flow"))
+            .agg((F.lit(damping) * F.sum(F.col("pr") * F.col("share"))).alias("flow"))
         )
         pr = (
-            deg.join(flowed, "u", "left")
+            verts.join(flowed, "u", "left")
             .join(F.broadcast(seed_flag), "u", "left")
             .select(
                 "u",
@@ -347,11 +365,7 @@ def connected_components(
         # every round (the 4-round plan printed at 29k lines and driver
         # planning dominated the wall) — truncate the lineage instead,
         # exactly like the converged/LSSS variants (guide §3.3/§7.3).
-        labels = (
-            _truncate_lineage(labels, rel)
-            if rel
-            else labels.localCheckpoint(eager=False)
-        )
+        labels = _truncate_lineage(labels, rel)
         nb = (
             und.join(labels.withColumnRenamed("u", "v").withColumnRenamed("lbl", "nlbl"), "v")
             .groupBy("u")
@@ -386,26 +400,6 @@ def _resolve_reliable(df: DataFrame, reliable: bool | None) -> bool:
     return reliable
 
 
-def _release_local_blocks(df: DataFrame) -> None:
-    """Free a SUPERSEDED round's localCheckpoint blocks (local mode only).
-
-    A contraction loop keeps only the last two rounds live; without this,
-    every round's blocks sit on the executor until the driver GC +
-    ContextCleaner get around to them (r11 ADVICE item 2). Only call on a
-    frame that will NEVER be read again — the checkpoint cut its lineage,
-    so a freed block cannot be recomputed (re-reading raises
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Best-effort: reaches through the
-    LogicalRDD plan node, so any API drift degrades to the old
-    GC-eventually behavior rather than failing the query.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never kill the loop
-        pass
-
-
 def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     """Cut plan lineage between rounds of an iterative loop.
 
@@ -422,8 +416,15 @@ def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     ContextCleaner reclaim them as the per-round frames are
     garbage-collected. :func:`session.get_spark` sets it; long-lived
     sessions built elsewhere must too.
+
+    Local mode is LAZY: the blocks are written by the first action on the
+    returned frame, so a loop's per-round count both materializes the
+    round and returns its answer in one job. Reliable mode writes eagerly
+    — a later read must find the durable copy, not race the job that
+    produces it. Either way the frame's own blocks are freed with
+    :func:`checkpoints.release` once nothing reads it any more.
     """
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
 
 
 def connected_components_converged(
@@ -485,9 +486,8 @@ def connected_components_converged(
                 .count()
             )
             # the changed-check was the old label frame's last reader —
-            # free its blocks now (see _release_local_blocks)
-            if not rel:
-                _release_local_blocks(labels)
+            # free its blocks now (see checkpoints.release)
+            release(labels)
             labels = new_labels
             if changed == 0:
                 converged = True
@@ -519,18 +519,28 @@ def connected_components_lsss(
     on ANY diameter (in practice a handful), where plain label propagation
     needs diameter rounds.
 
-    Each round rewrites the edge set over a parent forest:
+    Each round rewrites the canonical ``(big, small)`` edge set over a
+    parent forest, one ``min(v) OVER (PARTITION BY u)`` window per star
+    step — one exchange plus a sort, and no join back on ``u``:
 
-    - large-star: every vertex connects its LARGER neighbors to its
-      current minimum neighbor (or itself) — one groupBy(u) shuffle;
-    - small-star: every vertex connects its smaller-or-equal neighbors to
-      its minimum — after canonicalizing each edge to (big, small).
+    - large-star: over the symmetrized edges, every vertex connects its
+      LARGER neighbors to m(u) = min(N(u) ∪ {u});
+    - small-star: over the large-star edges (big -> small), every vertex
+      connects itself and its smaller neighbors to their minimum — both
+      edges of a row leave through one ``explode(array(struct...))``
+      ahead of the round's single ``distinct``.
+
+    A round is thus three shuffles (two windows, the distinct) and the
+    count over its checkpoint. The window buffers a whole partition, so a
+    hub vertex's neighbourhood lands in ONE task — it spills rather than
+    fails, but that task is the round's straggler on a power-law graph.
 
     The edge frame shrinks toward the star graph parent->root; fixpoint is
-    reached when a round changes nothing (hash-agnostic check: edge-set
-    symmetric difference is empty, one count job). Fails loudly past
-    ``max_rounds`` like :func:`connected_components_converged`, and takes
-    the same ``reliable`` checkpoint-mode switch (None = auto-detect from
+    reached when a round changes nothing (exact and hash-agnostic: unequal
+    edge counts prove change, equal counts fall through to an edge-set
+    symmetric-difference probe). Fails loudly past ``max_rounds`` like
+    :func:`connected_components_converged`, and takes the same
+    ``reliable`` checkpoint-mode switch (None = auto-detect from
     ``sc.getCheckpointDir()``) and ``round_counter`` telemetry list.
 
     Returns ``(part_key, component)`` where component = min vertex id of
@@ -538,22 +548,18 @@ def connected_components_lsss(
     """
     rel = _resolve_reliable(edges, reliable)
     # Rounds are lineage-truncated, not merely persisted: each round
-    # references the previous edge frame several times (symmetrize, min,
-    # join, diff), so the plan grows exponentially in rounds otherwise
-    # (see connected_components_converged).
+    # references the previous edge frame several times (symmetrize, count,
+    # diff), so the plan grows exponentially in rounds otherwise (see
+    # connected_components_converged).
     #
-    # Seed WITHOUT the symmetrized frame (r12, guide §2.4): the loop never
-    # touches `und` — its only consumers were the vertex set and the
-    # canonical edge seed, and both are derivable from the RAW edge frame
-    # at half the rows: u∪v over (src, dst) is the same vertex set as u
-    # over both directions, and greatest/least+distinct canonicalizes
-    # direction-insensitively. The old seed checkpointed a 2|E|-row frame
-    # (one full write + read) only to throw it away after round 0 —
-    # measured 4.0 s of cc_large_star_small_star's 7.7 s at sf0.1.
-    e0_raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    # lazy in local mode like the round frames: the seed count below
-    # materializes the blocks and returns the count in one job
-    e0 = _truncate_lineage(e0_raw, rel) if rel else e0_raw.localCheckpoint(eager=False)
+    # Seed WITHOUT the symmetrized frame (r12, guide §2.4): u∪v over the
+    # RAW (src, dst) edges is the vertex set, and greatest/least+distinct
+    # canonicalizes direction-insensitively — at half the rows of the old
+    # symmetrized seed (measured 4.0 s of cc_large_star_small_star's 7.7 s
+    # at sf0.1).
+    e0 = _truncate_lineage(
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v")), rel
+    )
     # vertex coverage matches the other two component variants: nodes come
     # from the PRE-self-loop-filter edge set, so a vertex whose only
     # incident edges are self-loops still labels itself (self-loops are
@@ -561,86 +567,63 @@ def connected_components_lsss(
     all_nodes = compact_persist(
         e0.select("u").union(e0.select(F.col("v").alias("u"))).distinct()
     )
-    cur0 = (
+    cur = _truncate_lineage(
         e0.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
+        .distinct(),
+        rel,
     )
-    # lazy localCheckpoint in local mode: the seed count materializes the
-    # blocks and returns the count in one job (see the round loop below)
-    cur = _truncate_lineage(cur0, rel) if rel else cur0.localCheckpoint(eager=False)
+    by_u = Window.partitionBy("u")
     converged = False
-    cur_n = cur.count()  # carried across rounds: each round counts only nxt
+    # local mode: the checkpoints are lazy, so each count materializes its
+    # frame's blocks and returns the count in ONE job; the previous
+    # round's count is carried, so each round counts only nxt
+    cur_n = cur.count()
     try:
         for rnd in range(max_rounds):
-            # ---- large-star over the SYMMETRIZED neighborhood: each u
-            # attaches its strictly-larger neighbors to
-            # m(u) = min(N(u) ∪ {u}). Emitted (v, m) has v > u >= m, so the
-            # output is already (big, small)-canonical.
+            # ---- large-star: emitted (v, m) has v > u >= m, so the output
+            # is already (big, small)-canonical. NOT distinct'd: duplicate
+            # (v, m) rows only widen the small-star window, and the round's
+            # final distinct collapses them.
             sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            m = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", F.col("u")).alias("m"))
-            )
-            # NOT distinct'd: duplicate (v, m) rows (several smaller
-            # neighbors of v sharing one m) only add map-side-combinable
-            # rows to the m2 aggregate and join fan-in below — the final
-            # ``small`` distinct collapses them — so skipping the dedup
-            # here removes one full Exchange per round (guide §2.4).
             large = (
-                sym.join(m, "u")
+                sym.select("u", "v", F.least(F.min("v").over(by_u), "u").alias("m"))
                 .filter(F.col("v") > F.col("u"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
             )
-            # ---- small-star: over (big -> small) edges, connect u and all
-            # its smaller neighbors to m(u) = min of the small neighborhood
-            m2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                large.join(m2, "u")
-                .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                .union(m2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-                .distinct()
+            # ---- small-star: m = min of u's smaller neighbours; (v, m) and
+            # (u, m) are both (big, small)-canonical since u > v >= m
+            star = large.select("u", "v", F.min("v").over(by_u).alias("m")).select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+                    )
+                ).alias("e")
             )
-            # local mode: LAZY localCheckpoint, so the convergence count
-            # below both materializes the checkpoint blocks and returns
-            # the count in ONE job per round (eager + count was two).
-            # Reliable mode keeps the eager write — the count must read
-            # the durable copy, not race the job that produces it.
-            nxt = (
-                _truncate_lineage(small, rel)
-                if rel
-                else small.localCheckpoint(eager=False)
+            nxt = _truncate_lineage(
+                star.select("e.u", "e.v").filter(F.col("u") != F.col("v")).distinct(),
+                rel,
             )
             # convergence check, cheapest-first and EXACT: unequal counts
-            # (one agg over the just-checkpointed frame; the previous
-            # round's count is carried, not recomputed) prove non-
-            # convergence without the two anti-joins; equal counts fall
-            # through to the symmetric-difference probe (count equality
-            # alone cannot prove edge-set equality).
+            # prove non-convergence without the two anti-joins; equal
+            # counts fall through to the symmetric-difference probe (count
+            # equality alone cannot prove edge-set equality).
             nxt_n = nxt.count()
-            if nxt_n != cur_n:
-                # the superseded round's blocks are dead once nxt's count
-                # materialized its checkpoint — free them now instead of
-                # waiting for driver GC (bounds residency to two rounds)
-                if not rel:
-                    _release_local_blocks(cur)
-                cur, cur_n = nxt, nxt_n
-                continue
-            diff = (
-                nxt.join(cur, ["u", "v"], "left_anti")
-                .union(cur.join(nxt, ["u", "v"], "left_anti"))
-                .limit(1)
-                .count()
-            )
-            if not rel:
-                _release_local_blocks(cur)
+            if nxt_n == cur_n:
+                diff = (
+                    nxt.join(cur, ["u", "v"], "left_anti")
+                    .union(cur.join(nxt, ["u", "v"], "left_anti"))
+                    .limit(1)
+                    .count()
+                )
+                converged = diff == 0
+            # the superseded round's blocks are dead once nxt's count
+            # materialized its checkpoint — free them now instead of
+            # waiting for driver GC (bounds residency to two rounds)
+            release(cur)
             cur, cur_n = nxt, nxt_n
-            if diff == 0:
-                converged = True
+            if converged:
                 if round_counter is not None:
                     round_counter.append(rnd + 1)
                 break
@@ -651,13 +634,12 @@ def connected_components_lsss(
             )
         # fixpoint edge set is the star forest child->root; roots and
         # isolated-in-forest vertices label themselves
-        comp = all_nodes.join(
+        return all_nodes.join(
             cur.groupBy("u").agg(F.min("v").alias("root")), "u", "left"
         ).select(
             F.col("u").alias("part_key"),
             F.coalesce(F.col("root"), F.col("u")).cast("long").alias("component"),
         )
-        return comp
     finally:
         all_nodes.unpersist()
 
@@ -678,25 +660,25 @@ def hits_bipartite(
     ``reliable`` as in :func:`connected_components`.
     """
     rel = _resolve_reliable(edges, reliable)
-
-    def _stage(df: DataFrame) -> DataFrame:
+    e = compact_persist(edges.select("hub", "auth"))
+    h = e.select("hub").distinct().withColumn("s", F.lit(1.0))
+    a = None
+    for _ in range(iters):
         # every push is referenced twice (L2-norm agg + normalize join) —
         # truncate the LINEAGE per half-round, not just the execution:
         # persist() reused blocks but left a 2^(2*iters)-copy logical tree
         # for the analyzer (the 2-iteration plan printed at 33k lines and
         # driver planning dominated the wall; guide §3.3/§7.3)
-        return _truncate_lineage(df, rel) if rel else df.localCheckpoint(eager=False)
-
-    e = compact_persist(edges.select("hub", "auth"))
-    h = e.select("hub").distinct().withColumn("s", F.lit(1.0))
-    a = None
-    for _ in range(iters):
-        a = _stage(e.join(h, "hub").groupBy("auth").agg(F.sum("s").alias("s")))
+        a = _truncate_lineage(
+            e.join(h, "hub").groupBy("auth").agg(F.sum("s").alias("s")), rel
+        )
         na = a.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
         a = a.crossJoin(F.broadcast(na)).select(
             "auth", (F.col("s") / F.col("nrm")).alias("s")
         )
-        h = _stage(e.join(a, "auth").groupBy("hub").agg(F.sum("s").alias("s")))
+        h = _truncate_lineage(
+            e.join(a, "auth").groupBy("hub").agg(F.sum("s").alias("s")), rel
+        )
         nh = h.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nrm"))
         h = h.crossJoin(F.broadcast(nh)).select(
             "hub", (F.col("s") / F.col("nrm")).alias("s")
@@ -736,11 +718,7 @@ def bfs_levels(
         # per-round lineage truncation, not persist: the frontier is
         # referenced twice per round and the plan doubles otherwise (see
         # connected_components)
-        dist = (
-            _truncate_lineage(dist, rel)
-            if rel
-            else dist.localCheckpoint(eager=False)
-        )
+        dist = _truncate_lineage(dist, rel)
         nb = (
             und.join(dist.withColumnRenamed("u", "v").withColumnRenamed("hop", "nhop"), "v")
             .groupBy("u")

@@ -590,18 +590,22 @@ def _label_pair_graph_distributed(
                 "exceeds the cap); raise max_rounds or switch the loop body "
                 "to large-star/small-star contraction"
             )
-        # Truncate the fixpoint labels' lineage BEFORE releasing the loop
-        # caches: the returned plan is consumed after the caches are gone,
-        # and each reference would otherwise re-run the whole rounds-deep
-        # propagation INCLUDING the pair detection upstream (measured 10x
-        # wall / 20x job blow-up). Reliable mode engages automatically when
-        # the session has a checkpoint dir (operators/graph).
+        # Truncate AND materialize the fixpoint labels BEFORE releasing the
+        # loop caches: the returned plan is consumed after the caches are
+        # gone, and each reference would otherwise re-run the whole
+        # rounds-deep propagation INCLUDING the pair detection upstream
+        # (measured 10x wall / 20x job blow-up). The count writes the
+        # (lazy, in local mode) checkpoint blocks. Reliable mode engages
+        # automatically when the session has a checkpoint dir
+        # (operators/graph).
         from binance_etl_clickhouse_spark.operators.graph import (
             _resolve_reliable,
             _truncate_lineage,
         )
 
-        return _truncate_lineage(labels, _resolve_reliable(labels, None))
+        labels = _truncate_lineage(labels, _resolve_reliable(labels, None))
+        labels.count()
+        return labels
     finally:
         loop_cache.unpersist()
 

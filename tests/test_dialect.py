@@ -3002,6 +3002,23 @@ class TestLimitOffsetForms:
         )
         assert got == [("a", 2), ("a", 3), ("b", 20)]
 
+    def test_limit_by_orders_by_an_unselected_column(self, engine, spark):
+        # ClickHouse accepts an ORDER BY column the SELECT list drops; the
+        # per-group window and the outer ORDER BY must still see it
+        spark.sql(
+            """SELECT * FROM VALUES
+             ('a', 1, 5.0), ('a', 2, 9.0), ('a', 3, 7.0),
+             ('b', 4, 1.0), ('b', 5, 3.0)
+             AS t(symbol, ts, volume)"""
+        ).createOrReplaceTempView("lbo_vol")
+        rows = engine.sql(
+            "SELECT symbol, ts FROM lbo_vol ORDER BY symbol, volume DESC "
+            "LIMIT 1 BY symbol",
+            dialect="clickhouse",
+        ).collect()
+        assert [tuple(r) for r in rows] == [("a", 2), ("b", 5)]
+        assert rows[0].__fields__ == ["symbol", "ts"]
+
     def test_limit_offset_by_parenthesized_group_list(self, engine, lb_view):
         got = self._rows(
             engine,
