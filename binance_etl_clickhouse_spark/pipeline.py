@@ -7,12 +7,30 @@ crypto_data_pipeline_clickhouse.py:722-737):
              -> update_funding_rates -> update_margin_rates
     (+ run logged to pipeline_logs; loop with sleep / --once)
 
-Here each ``update_*`` is one declarative Spark job:
-symbol-dim snapshot -> predicate + anti-join progress skip -> distributed
-paginated fetch (mapInPandas) -> clean transforms -> versioned append to the
-serving table. Tables are ServingTable parquet dirs under ``base_dir``
-(≙ the ClickHouse database); DDL is implicit in first write + the schemas
-module.
+Each ``update_*`` is a declarative plan ending in one versioned append to a
+serving table: symbol selection -> distributed paginated fetch
+(mapInPandas) -> clean transforms -> write. Tables are ServingTable parquet
+dirs under ``base_dir`` (≙ the ClickHouse database); DDL is implicit in
+first write + the schemas module.
+
+The small bookkeeping stays on the driver, as in the reference
+(progress.json, the symbol lists, ``last_ts + 1`` resume): each symbol
+dimension is collected once and reused until the table's state token
+changes, and the incremental resume watermarks live in a JSON state file
+(:class:`WatermarkState`). Spark jobs per stage of a steady incremental
+cycle (AQE runs each shuffle stage as its own job):
+
+| stage                              | jobs | what                                    |
+|------------------------------------|------|-----------------------------------------|
+| ``update_klines_incremental`` x 2  | 4    | fetch exchange, dedup, rebalance, write |
+| ``update_funding_rates``           | 3    | dedup, rebalance, write                 |
+| ``update_margin_rates``            | 3    | dedup, rebalance, write                 |
+| ``klines_daily.refresh``           | 4    | schema, touched months, exchange, write |
+
+A changed symbol dimension adds its keep-last collect (3 jobs) once; a
+changed klines table (backfill, compaction, delete, expiry) adds the one
+all-markets watermark scan (3 jobs) once. ``tests/test_ingest_cycle.py``
+pins the 18-job cycle.
 """
 
 from __future__ import annotations
@@ -22,7 +40,9 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark import Accumulator
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from binance_etl_clickhouse_spark import schemas
@@ -34,13 +54,14 @@ from binance_etl_clickhouse_spark.operators.etl import (
 from binance_etl_clickhouse_spark.sources import synthetic
 from binance_etl_clickhouse_spark.sources.fetcher import (
     FetchConfig,
+    MaxPerKey,
     PageFn,
     fetch_historical_klines,
     synthetic_page_fn,
 )
 from binance_etl_clickhouse_spark.sources.synthetic import INTERVAL_MS
 from binance_etl_clickhouse_spark.storage.rollup import RollupTable
-from binance_etl_clickhouse_spark.storage.state import ProgressTable
+from binance_etl_clickhouse_spark.storage.state import ProgressTable, WatermarkState
 from binance_etl_clickhouse_spark.storage.table import ServingTable
 
 
@@ -50,6 +71,13 @@ INTERVAL_TABLE_SUFFIX = {
     "1m": "1min", "5m": "5min", "15m": "15min", "30m": "30min",
     "1h": "1hour", "4h": "4hour", "1d": "1day",
 }
+
+#: symbol-dimension columns the stages read, per market (SQL expressions)
+_DIM_COLS = {
+    "SPOT": ("symbol", "quote_asset", "base_asset", "is_margin_trading_allowed"),
+    "PERPETUAL": ("symbol", "unix_millis(delivery_date) AS delivery_date_ms"),
+}
+_FETCH_INPUT = "symbol string, delivery_date_ms long, start_ms long"
 
 
 @dataclass
@@ -126,6 +154,10 @@ class Pipeline:
             ],
         )
         self.logs_path = os.path.join(base_dir, "pipeline_logs")
+        #: resume watermarks of the klines table (update_klines_incremental)
+        self.watermarks = WatermarkState(os.path.join(base_dir, "_klines_watermarks.json"))
+        #: market -> (dimension state token, snapshot rows); see _dim_rows
+        self._dims: dict[str, tuple] = {}
 
     # -- sequencing -------------------------------------------------------
 
@@ -142,28 +174,58 @@ class Pipeline:
         self.spot_symbols.append(spot, self._next_seq(self.spot_symbols))
         self.perp_symbols.append(perp, self._next_seq(self.perp_symbols))
 
-    def _select_symbols(self, market_type: str) -> DataFrame:
-        """Symbol-dimension scan + predicates (P4/P5, reference :324-336)."""
-        if market_type == "SPOT":
-            dim = self.spot_symbols.read(self.spark)
-            return dim.filter(F.col("quote_asset").isin(self.cfg.quote_assets)).select(
-                "symbol"
-            )
-        dim = self.perp_symbols.read(self.spark)
-        start_ts = F.timestamp_millis(F.lit(self.cfg.start_ms))
-        return dim.filter(F.col("delivery_date") >= start_ts).select(
-            "symbol", F.unix_millis("delivery_date").alias("delivery_date_ms")
-        )
+    def _dim_rows(self, market_type: str) -> list:
+        """The market's symbol-dimension snapshot (keep-last rows, only the
+        ``_DIM_COLS`` columns), collected once and reused until the table's
+        state token changes."""
+        table = self.spot_symbols if market_type == "SPOT" else self.perp_symbols
+        token = table.state_token(self.spark)
+        cached = self._dims.get(market_type)
+        if cached is None or cached[0] != token:
+            rows = table.read(self.spark).selectExpr(*_DIM_COLS[market_type]).collect()
+            cached = self._dims[market_type] = (token, rows)
+        return cached[1]
 
-    def update_klines(self, market_type: str, interval: str) -> int:
+    def _select_symbols(self, market_type: str) -> list[tuple[str, int | None]]:
+        """Symbol predicates over the dimension snapshot (P4/P5, reference
+        :324-336): ``(symbol, delivery_date_ms)`` pairs, the delivery date
+        ``None`` for spot symbols. Same semantics as the SQL predicates: a
+        NULL quote asset or delivery date never passes."""
+        if market_type == "SPOT":
+            quotes = set(self.cfg.quote_assets)
+            return [
+                (r.symbol, None)
+                for r in self._dim_rows("SPOT")
+                if r.quote_asset is not None and r.quote_asset in quotes
+            ]
+        return [
+            (r.symbol, r.delivery_date_ms)
+            for r in self._dim_rows("PERPETUAL")
+            if r.delivery_date_ms is not None and r.delivery_date_ms >= self.cfg.start_ms
+        ]
+
+    def _fetch_input(
+        self, symbols: list[tuple[str, int | None]], starts: list[int | None] | None = None
+    ) -> DataFrame:
+        """The fetch's symbol frame, built from pandas: Arrow turns it into a
+        local relation on the driver, where a Python list would run Python
+        worker tasks to serialize it."""
+        pdf = pd.DataFrame({
+            "symbol": [s for s, _ in symbols],
+            "delivery_date_ms": pd.array([d for _, d in symbols], dtype="Int64"),
+            "start_ms": pd.array(starts or [None] * len(symbols), dtype="Int64"),
+        })
+        return self.spark.createDataFrame(pdf, _FETCH_INPUT)
+
+    def _fetch(
+        self,
+        symbols: DataFrame,
+        n_symbols: int,
+        market_type: str,
+        interval: str,
+        last_bar: Accumulator | None = None,
+    ) -> DataFrame:
         cfg = self.cfg
-        progress = ProgressTable(
-            os.path.join(self.base_dir, f"progress_klines_{market_type}_{interval}")
-        )
-        symbols = self._select_symbols(market_type)
-        pending = progress.pending(symbols, self.spark)
-        if pending.isEmpty():
-            return 0
         fetch_cfg = FetchConfig(
             interval=interval,
             page_limit=1000 if market_type == "SPOT" else 499,
@@ -172,9 +234,25 @@ class Pipeline:
         page_fn = self.page_fn or synthetic_page_fn(
             interval_ms=INTERVAL_MS[interval], origin_ms=cfg.start_ms
         )
-        raw = fetch_historical_klines(
-            pending, page_fn, cfg.start_ms, cfg.end_ms, fetch_cfg, cfg.fetch_partitions
-        ).cache()  # one fetch, consumed twice (data + failed symbols)
+        # one fetch task per symbol at most: a Python task costs its start-up
+        # CPU even when its partition is empty
+        n_partitions = min(cfg.fetch_partitions, n_symbols)
+        return fetch_historical_klines(
+            symbols, page_fn, cfg.start_ms, cfg.end_ms, fetch_cfg, n_partitions, last_bar
+        )
+
+    def update_klines(self, market_type: str, interval: str) -> int:
+        progress = ProgressTable(
+            os.path.join(self.base_dir, f"progress_klines_{market_type}_{interval}")
+        )
+        symbols = self._select_symbols(market_type)
+        if not symbols:
+            return 0
+        pending = progress.pending(self._fetch_input(symbols), self.spark)
+        if pending.isEmpty():
+            return 0
+        # one fetch, consumed twice (data + failed symbols)
+        raw = self._fetch(pending, len(symbols), market_type, interval).cache()
         try:
             failed = [
                 (r.symbol, r.fetch_error)
@@ -183,8 +261,6 @@ class Pipeline:
                 .collect()
             ]
             ok_raw = raw.filter(F.col("fetch_error").isNull()).drop("fetch_error")
-
-            from pyspark.sql import Observation
 
             obs = Observation(f"ingest_{market_type}_{interval}")
             cleaned = clean_klines(ok_raw, market_type=market_type, interval=interval).observe(
@@ -207,7 +283,7 @@ class Pipeline:
                 f"{len(failed)} symbols failed for {market_type}/{interval}: {preview}",
             )
             failed_df = self.spark.createDataFrame(
-                [(s,) for s, _ in failed], "symbol string"
+                pd.DataFrame({"symbol": [s for s, _ in failed]}), "symbol string"
             )
             done = pending.join(F.broadcast(failed_df), "symbol", "left_anti")
         else:
@@ -217,41 +293,57 @@ class Pipeline:
         # second full-table scan per ingest
         return int(self.last_ingest_metrics.get("rows", 0))
 
+    def _resume_watermarks(self) -> dict[str, int]:
+        """Last written bar (ms) per ``type|interval|symbol`` of the klines
+        table. Read from the state file while its token matches the table;
+        otherwise one ``max(timestamp)`` scan over every market rebuilds it."""
+        token = self.klines.state_token(self.spark)
+        last_ms = self.watermarks.load(token)
+        if last_ms is None:
+            last_ms = {}
+            if token is not None:
+                rows = (
+                    self.klines.read_raw(self.spark)
+                    .groupBy("type", "interval", "symbol")
+                    .agg(F.unix_millis(F.max("timestamp")).alias("last_ms"))
+                    .collect()
+                )
+                last_ms = {
+                    f"{r.type}|{r.interval}|{r.symbol}": int(r.last_ms)
+                    for r in rows
+                    if r.last_ms is not None
+                }
+            self.watermarks.save(token, last_ms)
+        return last_ms
+
     def update_klines_incremental(self, market_type: str, interval: str) -> int:
         """T1 incremental resume: per-symbol fetch restarts at the serving
         table's watermark + 1 ms (≙ the reference's `last_ts + 1` pagination
-        resume, derived batch-side via groupBy(symbol).agg(max(timestamp))).
+        resume).
 
         Unlike the backfill path there is no progress gate — re-runs always
         top up the newest bars; overlap is absorbed by keep-last dedup
         (idempotent upsert, T4). Symbols with no data yet start from the
-        configured start.
+        configured start. The watermarks come from the state file; the fetch
+        feeds a per-symbol max accumulator, and after the append succeeds the
+        file is rewritten under the table's new token. A symbol that fails
+        before its first page keeps its old watermark; one that fails later
+        resumes after its last written bar.
         """
-        cfg = self.cfg
         symbols = self._select_symbols(market_type)
-        if symbols.isEmpty():
+        if not symbols:
             return 0
-        wm = (
-            self.klines.read_raw(self.spark)
-            .filter((F.col("type") == market_type) & (F.col("interval") == interval))
-            .groupBy("symbol")
-            .agg((F.unix_millis(F.max("timestamp")) + 1).alias("start_ms"))
-        ) if self.klines.exists() else None
-        if wm is not None:
-            symbols = symbols.join(F.broadcast(wm), "symbol", "left")
-        fetch_cfg = FetchConfig(
-            interval=interval,
-            page_limit=1000 if market_type == "SPOT" else 499,
-            budget_calls=2750 if market_type == "SPOT" else 1150,
+        last_ms = self._resume_watermarks()
+        prefix = f"{market_type}|{interval}|"
+        starts = [
+            last_ms[prefix + s] + 1 if prefix + s in last_ms else None for s, _ in symbols
+        ]
+        last_bar = self.spark.sparkContext.accumulator({}, MaxPerKey())
+        raw = self._fetch(
+            self._fetch_input(symbols, starts), len(symbols), market_type, interval,
+            last_bar=last_bar,
         )
-        page_fn = self.page_fn or synthetic_page_fn(
-            interval_ms=INTERVAL_MS[interval], origin_ms=cfg.start_ms
-        )
-        raw = fetch_historical_klines(
-            symbols, page_fn, cfg.start_ms, cfg.end_ms, fetch_cfg, cfg.fetch_partitions
-        ).filter(F.col("fetch_error").isNull()).drop("fetch_error")
-        from pyspark.sql import Observation
-
+        raw = raw.filter(F.col("fetch_error").isNull()).drop("fetch_error")
         obs = Observation(f"incr_{market_type}_{interval}")
         cleaned = clean_klines(raw, market_type=market_type, interval=interval).observe(
             obs, F.count(F.lit(1)).alias("rows")
@@ -259,11 +351,13 @@ class Pipeline:
         # single evaluation: the fetch runs exactly once (the write job);
         # an empty delta writes no partition files, so the append is a no-op
         self.klines.append(cleaned, self._next_seq(self.klines))
+        for symbol, ms in last_bar.value.items():
+            key = prefix + symbol
+            last_ms[key] = max(ms, last_ms.get(key, ms))
+        self.watermarks.save(self.klines.state_token(self.spark), last_ms)
         return int(obs.get["rows"])
 
     def update_funding_rates(self) -> int:
-        from pyspark.sql import Observation
-
         raw = synthetic.synthetic_funding_raw(
             self.spark, n_symbols=self.cfg.n_perp_symbols, start_ms=self.cfg.start_ms
         )
@@ -277,18 +371,13 @@ class Pipeline:
 
     def update_margin_rates(self) -> int:
         # seeded by DISTINCT margin-enabled base assets (A1, additional_data:218-219)
-        assets = (
-            self.spot_symbols.read(self.spark)
-            .filter(F.col("is_margin_trading_allowed") == 1)
-            .select("base_asset")
-            .distinct()
-        )
+        assets = sorted({
+            r.base_asset
+            for r in self._dim_rows("SPOT")
+            if r.is_margin_trading_allowed == 1 and r.base_asset is not None
+        })
         raw = synthetic.synthetic_margin_raw(self.spark, start_ms=self.cfg.start_ms)
-        raw = raw.join(
-            F.broadcast(assets.withColumnRenamed("base_asset", "asset")), "asset", "inner"
-        )
-        from pyspark.sql import Observation
-
+        raw = raw.filter(F.col("asset").isin(assets))
         obs = Observation("incr_margin")
         cleaned = clean_margin_rates(raw).observe(obs, F.count(F.lit(1)).alias("rows"))
         self.margin_rates.append(cleaned, self._next_seq(self.margin_rates))
@@ -298,8 +387,9 @@ class Pipeline:
 
     def log_run(self, status: str, comment: str) -> None:
         """K4: append one audit row (timestamp DEFAULT now())."""
+        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         row = self.spark.createDataFrame(
-            [(dt.datetime.now(dt.timezone.utc).replace(tzinfo=None), status, comment)],
+            pd.DataFrame({"timestamp": [now], "status": [status], "comment": [comment]}),
             schemas.PIPELINE_LOGS,
         )
         row.write.mode("append").parquet(self.logs_path)

@@ -26,6 +26,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,6 +89,19 @@ def margin_rate_benign_error(e: Exception) -> bool:
     end-of-data, not a failure. Every other source treats -1102 as the
     generic 'mandatory parameter empty/malformed' client error it is."""
     return binance_error_code(e) == -1102
+
+
+class MaxPerKey(AccumulatorParam):
+    """Accumulator of ``{key: max value}`` dicts (merged by per-key max)."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, other: dict) -> dict:
+        for k, v in other.items():
+            if k not in acc or v > acc[k]:
+                acc[k] = v
+        return acc
 
 
 @dataclass
@@ -170,6 +184,7 @@ def fetch_historical_klines(
     end_ms: int,
     cfg: FetchConfig,
     n_partitions: int = 8,
+    last_bar: Accumulator | None = None,
 ) -> DataFrame:
     """Distributed S4: symbol dimension -> raw kline pages.
 
@@ -184,6 +199,11 @@ def fetch_historical_klines(
 
     The global call budget is divided across ``n_partitions``
     partition-local token buckets (C2).
+
+    ``last_bar``, a :class:`MaxPerKey` accumulator, receives
+    ``{symbol: newest bar ms}`` for every page the fetch emits (failed
+    symbols' sentinel rows feed nothing), so once the job that consumes the
+    pages succeeds it holds the last bar written per symbol.
     """
     cols = ["symbol"]
     for opt in ("delivery_date_ms", "start_ms"):
@@ -207,9 +227,13 @@ def fetch_historical_klines(
                 row_start = _opt_int(row, "start_ms")
                 sym_start = row_start if row_start is not None else start_ms
                 try:
-                    yield from paginate_symbol(
+                    for page in paginate_symbol(
                         row.symbol, sym_start, sym_end, page_fn, cfg, bucket
-                    )
+                    ):
+                        yield page
+                        if last_bar is not None:
+                            newest = int(page["timestamp"].astype("int64").max())
+                            last_bar.add({row.symbol: newest})
                 except Exception as e:  # noqa: BLE001 — per-symbol tolerance
                     # failed-symbol semantics (reference :349, :408-410):
                     # one symbol's failure must not kill the batch; emit a

@@ -37,7 +37,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from binance_etl_clickhouse_spark.functions.scalars import month_bucket
@@ -97,30 +97,47 @@ class RollupTable:
     def refresh(self, spark: SparkSession) -> list[int]:
         """Incrementally refresh; returns the month buckets recomputed.
 
-        One small job finds (touched months, max seq) from files newer than
-        the last refresh — parquet stats prune everything older — then one
-        job per refresh recomputes exactly those months from the deduped
-        snapshot and dynamically overwrites the matching rollup partitions.
+        One job finds the touched months and their max seq from files newer
+        than the last refresh — parquet stats prune everything older; the
+        scan is observed into a no-op sink, so no exchange — then one job per
+        refresh recomputes exactly those months from the deduped snapshot
+        and dynamically overwrites the matching rollup partitions. When
+        ``group_cols`` share columns with the source keys, the keep-last
+        window and the aggregate reuse one exchange on those columns, and the
+        write needs none; otherwise the output is repartitioned by month.
         """
         last_seq = self._meta().get("last_seq", -1)
         if not self.source.exists():
             return []
-        fresh = self.source.read_raw(spark).filter(F.col(INGEST_SEQ) > last_seq)
-        touched = (
-            fresh.groupBy(MONTH_COL)
-            .agg(F.max(INGEST_SEQ).alias("seq"))
-            .collect()
+        src = self.source
+        base = src.read_raw(spark)  # one schema inference for both scans
+        obs = Observation("rollup_touched")
+        (
+            base.filter(F.col(INGEST_SEQ) > last_seq)
+            .select(MONTH_COL, INGEST_SEQ)
+            .observe(
+                obs, F.collect_set(MONTH_COL).alias("months"), F.max(INGEST_SEQ).alias("seq")
+            )
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
         )
-        if not touched:
+        touched = obs.get
+        if not touched["months"]:
             return []
-        months = sorted(int(r[MONTH_COL]) for r in touched)
-        new_seq = max(int(r["seq"]) for r in touched)
+        months = sorted(int(m) for m in touched["months"])
+        new_seq = int(touched["seq"])
 
         # Dedup within the touched months only — exact because the dedup key
         # contains time_col and month is a function of it (every version of a
         # key shares a month), so the partition filter commutes with keep-last.
-        src = self.source
-        raw = src.read_raw(spark).filter(F.col(MONTH_COL).isin(months))
+        raw = base.filter(F.col(MONTH_COL).isin(months))
+        # one exchange serves both the keep-last window and the aggregate when
+        # the group columns share source keys: hash-partitioning on the shared
+        # keys clusters every dedup key and every group (a superset of them)
+        shared = [c for c in self.group_cols if c in src.keys]
+        if shared:
+            raw = raw.repartition(*shared)
         snap = keep_last(raw, src.keys, INGEST_SEQ)
         bucket = F.date_trunc(self.granularity, F.col(src.time_col)).alias(BUCKET_COL)
         out = (
@@ -128,9 +145,10 @@ class RollupTable:
             .agg(*self.aggs())
             .withColumn(MONTH_COL, month_bucket(BUCKET_COL))
         )
+        if not shared:
+            out = out.repartition(MONTH_COL)
         (
-            out.repartition(MONTH_COL)
-            .sortWithinPartitions(MONTH_COL, *self.group_cols, BUCKET_COL)
+            out.sortWithinPartitions(MONTH_COL, *self.group_cols, BUCKET_COL)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(MONTH_COL)

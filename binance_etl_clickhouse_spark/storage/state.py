@@ -5,10 +5,16 @@ symbols on restart (crypto_data_pipeline_clickhouse.py:317-322, :339). Here
 the completed set is a small parquet table and the skip is a broadcast
 left-anti join (SURVEY.md P7/T2) — the same crash-resume semantic,
 cluster-visible, and composable into the symbol-selection plan.
+
+:class:`WatermarkState` is the incremental loop's twin of progress.json: the
+last written bar per ``type|interval|symbol`` (the reference resumes each
+symbol at ``last_ts + 1``, T1), kept as one small driver-side JSON file and
+trusted only while the serving table's state token is unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
@@ -42,3 +48,32 @@ class ProgressTable:
 
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
+
+
+@dataclass
+class WatermarkState:
+    """Resume watermarks of a serving table: ``{key: last bar in ms}``,
+    stamped with the table's :meth:`ServingTable.state_token` at the time
+    they were true. Any write the pipeline did not account for (a backfill,
+    compaction, delete, update or expiry) changes the token, and
+    :meth:`load` then answers ``None`` so the caller rescans the table."""
+
+    path: str
+
+    def load(self, token: list | None) -> dict[str, int] | None:
+        try:
+            with open(self.path) as f:
+                state = json.load(f)
+        except (OSError, ValueError):
+            return None
+        if not isinstance(state, dict) or state.get("token") != token:
+            return None
+        last_ms = state.get("last_ms")
+        return last_ms if isinstance(last_ms, dict) else None
+
+    def save(self, token: list | None, last_ms: dict[str, int]) -> None:
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"token": token, "last_ms": last_ms}, f)
+        os.replace(tmp, self.path)

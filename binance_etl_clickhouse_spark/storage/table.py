@@ -221,6 +221,22 @@ class ServingTable:
         self._write_sidecar(v)
         return v
 
+    def state_token(self, spark: SparkSession) -> list | None:
+        """Driver-side identity of the table's contents, read with no Spark
+        job: the newest ingest seq plus a digest of the data-file list.
+        Appends bump the seq; compaction, deletes, updates and expiry
+        rewrite or drop files, whose names are unique per write. ``None``
+        for a missing table. Caches of derived state (a symbol-dimension
+        snapshot, resume watermarks) stay valid while the token is equal."""
+        import hashlib
+
+        from binance_etl_clickhouse_spark.storage import zonemap as _zm
+
+        if not self.exists():
+            return None
+        files = "\n".join(_zm.data_files(self.path)).encode()
+        return [self.max_ingest_seq(spark), hashlib.sha1(files).hexdigest()]
+
     # -- write path -------------------------------------------------------
 
     def append(self, df: DataFrame, ingest_seq: int) -> None:

@@ -35,7 +35,11 @@ COLLECT_WHITELIST = {
     ),
     "operators/sketches.py": "kilobyte-scale sketch states (CMS merge)",
     "operators/unigram.py": "vocab-sized piece-count tables per EM step (pieces, not rows)",
-    "pipeline.py": "failed-symbol report list (per-run, symbols not rows)",
+    "pipeline.py": (
+        "symbol-dimension rows (symbols, not bars), the failed-symbol report "
+        "list, and the resume-watermark rows of the all-markets max(timestamp) "
+        "scan (at most symbols x markets x intervals)"
+    ),
     "dialect_ddl.py": (
         "limit(1) enum-gate offender probe — at most ONE row, and only on "
         "INSERT blocks into tables that declare Enum columns"
@@ -46,7 +50,6 @@ COLLECT_WHITELIST = {
         "SHOW CREATE statement text (one metadata row) for the round-trip "
         "re-provisioning query"
     ),
-    "storage/rollup.py": "touched (month, seq) pairs (months, not rows)",
     "storage/table.py": "per-MONTH counts / kept-month set for delete_where/update_where pruning (months, not rows)",
     "storage/tokenbloom.py": "m/64 bloom longs per FILE (files, not rows)",
 }
