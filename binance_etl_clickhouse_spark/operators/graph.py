@@ -440,11 +440,9 @@ def connected_components_converged(
     leakage-safe splitting cannot detect). Same loud-failure contract as
     ``neardup_clusters`` (operators/neardup.py).
 
-    Scale shape: one shuffle per round plus a LIMIT-1 changed-check job
-    (short-circuits after the first changed row). Each round's label frame
-    is CHECKPOINTED, not merely persisted: every round references the
-    previous labels three times (neighbor-min, rejoin, changed-check), so
-    without lineage truncation the logical plan grows 3^rounds — a
+    Scale shape: one neighbor-min shuffle per round, one count per round
+    that is also its changed-check (loop in :func:`_min_label_fixpoint`).
+    Each round's label frame is CHECKPOINTED, not merely persisted: a
     diameter-12 graph produced a 2 GB plan string before this.
 
     ``reliable`` picks the checkpoint mode: ``False`` = localCheckpoint
@@ -459,52 +457,76 @@ def connected_components_converged(
     """
     rel = _resolve_reliable(edges, reliable)
     und = undirected(edges).select("u", "v").persist()
+    try:
+        labels = _min_label_fixpoint(
+            und, max_rounds, rel, "connected_components_converged", round_counter
+        )
+        return labels.select(
+            F.col("u").alias("part_key"), F.col("lbl").cast("long").alias("component")
+        )
+    finally:
+        und.unpersist()
+
+
+def _min_label_fixpoint(
+    sym_edges: DataFrame,
+    max_rounds: int,
+    rel: bool,
+    who: str,
+    round_counter: list | None = None,
+) -> DataFrame:
+    """Min-label propagation over a symmetric ``(u, v)`` edge frame to the
+    fixpoint -> ``(u, lbl)``, ``lbl`` keeping the id type; ``who`` leads
+    the error raised past ``max_rounds``. Shared by
+    :func:`connected_components_converged` and ``neardup_clusters``'
+    distributed regime (operators/neardup).
+
+    Each round's frame carries a ``chg`` flag (the label fell this round),
+    so the count that materializes the round is also its changed-check: no
+    join back against the previous labels and no Limit (see the probe
+    comment in :func:`connected_components_lsss`). The label frame is
+    lineage-truncated every round: a round reads the previous labels twice
+    (neighbor-min, rejoin), so without truncation the logical plan grows
+    2^rounds. The returned frame is the last round's, already materialized.
+    """
     labels = _truncate_lineage(
-        und.select("u").distinct().withColumn("lbl", F.col("u")), rel
+        sym_edges.select("u").distinct().withColumn("lbl", F.col("u")), rel
     )
-    converged = False
     try:
         for rnd in range(max_rounds):
             nb = (
-                und.join(
-                    labels.withColumnRenamed("u", "v").withColumnRenamed("lbl", "nlbl"),
+                sym_edges.join(
+                    labels.select(F.col("u").alias("v"), F.col("lbl").alias("nlbl")),
                     "v",
                 )
                 .groupBy("u")
                 .agg(F.min("nlbl").alias("nlbl"))
             )
             new_labels = _truncate_lineage(
-                labels.join(nb, "u").select(
-                    "u", F.least("lbl", "nlbl").alias("lbl")
+                labels.select("u", "lbl").join(nb, "u").select(
+                    "u",
+                    F.least("lbl", "nlbl").alias("lbl"),
+                    (F.col("nlbl") < F.col("lbl")).alias("chg"),
                 ),
                 rel,
             )
-            changed = (
-                new_labels.join(labels.withColumnRenamed("lbl", "old"), "u")
-                .filter(F.col("lbl") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            # the changed-check was the old label frame's last reader —
-            # free its blocks now (see checkpoints.release)
+            changed = new_labels.filter("chg").count()
+            # the count materialized the new round, the old label frame's
+            # last reader — free its blocks now (see checkpoints.release)
             release(labels)
             labels = new_labels
             if changed == 0:
-                converged = True
                 if round_counter is not None:
                     round_counter.append(rnd + 1)
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_converged: no fixpoint within "
-                f"{max_rounds} rounds (component diameter exceeds the cap); "
-                "raise max_rounds or use connected_components_lsss"
-            )
-        return labels.select(
-            F.col("u").alias("part_key"), F.col("lbl").cast("long").alias("component")
+                return labels.select("u", "lbl")
+        raise RuntimeError(
+            f"{who}: min-label propagation did not reach the fixpoint within "
+            f"{max_rounds} rounds (no fixpoint while a component's diameter "
+            "exceeds the cap); raise max_rounds or use connected_components_lsss"
         )
-    finally:
-        und.unpersist()
+    except BaseException:
+        release(labels)
+        raise
 
 
 def connected_components_lsss(
@@ -538,7 +560,7 @@ def connected_components_lsss(
     The edge frame shrinks toward the star graph parent->root; fixpoint is
     reached when a round changes nothing (exact and hash-agnostic: unequal
     edge counts prove change, equal counts fall through to an edge-set
-    symmetric-difference probe). Fails loudly past ``max_rounds`` like
+    intersection count). Fails loudly past ``max_rounds`` like
     :func:`connected_components_converged`, and takes the same
     ``reliable`` checkpoint-mode switch (None = auto-detect from
     ``sc.getCheckpointDir()``) and ``round_counter`` telemetry list.
@@ -606,18 +628,15 @@ def connected_components_lsss(
                 rel,
             )
             # convergence check, cheapest-first and EXACT: unequal counts
-            # prove non-convergence without the two anti-joins; equal
-            # counts fall through to the symmetric-difference probe (count
-            # equality alone cannot prove edge-set equality).
+            # prove non-convergence; equal counts fall through to the
+            # intersection count (both frames are distinct edge sets, so
+            # |nxt ∩ cur| == |nxt| == |cur| iff they are equal). No Limit:
+            # Spark names a codegen'd limit's counter _limit_counter_<global
+            # id>, so a .limit(1) probe compiles fresh classes on EVERY
+            # call, which the codegen cache can never hold.
             nxt_n = nxt.count()
             if nxt_n == cur_n:
-                diff = (
-                    nxt.join(cur, ["u", "v"], "left_anti")
-                    .union(cur.join(nxt, ["u", "v"], "left_anti"))
-                    .limit(1)
-                    .count()
-                )
-                converged = diff == 0
+                converged = nxt.join(cur, ["u", "v"]).count() == nxt_n
             # the superseded round's blocks are dead once nxt's count
             # materialized its checkpoint — free them now instead of
             # waiting for driver GC (bounds residency to two rounds)

@@ -549,65 +549,29 @@ DRIVER_CLOSURE_MAX_EDGES = 200_000
 def _label_pair_graph_distributed(
     edges: DataFrame, max_rounds: int
 ) -> DataFrame:
-    """Min-label propagation over the (a, b) edge frame -> (node, lbl).
+    """Min-label propagation over the symmetric (a, b) edge frame ->
+    (node, lbl), run by the graph operators' fixpoint loop
+    (``operators.graph._min_label_fixpoint``).
 
     One equi-join + one groupBy(min) shuffle per round, both O(|pairs|);
     rounds needed = component diameter (shallow for near-dup chains), with
     a loud failure past the cap — part-propagated labels would silently
-    split a component, which leakage_safe_split cannot detect.
+    split a component, which leakage_safe_split cannot detect. Each round
+    is lineage-truncated: with mere caching the plan doubled every round
+    and a 7-round pair graph never finished planning.
     """
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .cache()
+    from binance_etl_clickhouse_spark.operators.graph import (
+        _min_label_fixpoint,
+        _resolve_reliable,
     )
-    converged = False
-    loop_cache = labels  # the currently-persisted loop frame, for cleanup
-    try:
-        for _ in range(max_rounds):
-            prop = edges.join(
-                labels.select(F.col("node").alias("b"), F.col("lbl")), "b"
-            ).select(F.col("a").alias("node"), "lbl")
-            new_labels = (
-                labels.union(prop).groupBy("node").agg(F.min("lbl").alias("lbl")).cache()
-            )
-            changed = (
-                new_labels.join(labels.withColumnRenamed("lbl", "old"), "node")
-                .filter(F.col("lbl") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            labels.unpersist()
-            labels = loop_cache = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"neardup_clusters: min-label propagation did not reach the "
-                f"fixpoint within {max_rounds} rounds (component diameter "
-                "exceeds the cap); raise max_rounds or switch the loop body "
-                "to large-star/small-star contraction"
-            )
-        # Truncate AND materialize the fixpoint labels BEFORE releasing the
-        # loop caches: the returned plan is consumed after the caches are
-        # gone, and each reference would otherwise re-run the whole
-        # rounds-deep propagation INCLUDING the pair detection upstream
-        # (measured 10x wall / 20x job blow-up). The count writes the
-        # (lazy, in local mode) checkpoint blocks. Reliable mode engages
-        # automatically when the session has a checkpoint dir
-        # (operators/graph).
-        from binance_etl_clickhouse_spark.operators.graph import (
-            _resolve_reliable,
-            _truncate_lineage,
-        )
 
-        labels = _truncate_lineage(labels, _resolve_reliable(labels, None))
-        labels.count()
-        return labels
-    finally:
-        loop_cache.unpersist()
+    labels = _min_label_fixpoint(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v")),
+        max_rounds,
+        _resolve_reliable(edges, None),
+        "neardup_clusters",
+    )
+    return labels.select(F.col("u").alias("node"), "lbl")
 
 
 def _label_pair_graph_local(edges_rows, spark, dtype) -> DataFrame:

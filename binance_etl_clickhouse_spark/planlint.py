@@ -33,10 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _plan_str(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _has_global_window(plan: str) -> bool:
     """A ``Window`` node prints ``[funcs], [partitionSpec], [orderSpec]``;
     with no PARTITION BY the partition group is omitted, leaving two
@@ -56,7 +52,11 @@ def _has_global_window(plan: str) -> bool:
 
 def lint_plan(df: DataFrame) -> list[str]:
     """Return scale-hazard warnings for a DataFrame's physical plan."""
-    plan = _plan_str(df)
+    return lint_plan_string(df._jdf.queryExecution().executedPlan().toString())
+
+
+def lint_plan_string(plan: str) -> list[str]:
+    """:func:`lint_plan` over an already-rendered executed-plan string."""
     warnings: list[str] = []
 
     if "CartesianProduct" in plan:

@@ -41,6 +41,25 @@ _BASE_CONFS: dict[str, str] = {
     # checkpoint storage. With it, each superseded round's files are
     # removed once its RDD is garbage-collected.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # Generated-class cache (ClickHouse's compiled_expression_cache analogue).
+    # Spark's default LRU holds 100 classes. Measured distinct classes: 198
+    # in one perfbench analytics round, 941-949 in one pass of bench.py's
+    # 55-query headline sweep (three runs). A cyclic working set above the
+    # LRU's size misses on every access, so at 100 every analytics round
+    # recompiled ~280 classes (Janino ~16 ms each, then the JIT). The
+    # sweep's second pass recompiled 59 classes at 1000 (Guava's cache
+    # evicts within a segment before the whole cache is full), 6 at 2000
+    # and 2 at 100000. Static conf: the cache is a JVM-wide object built
+    # at the first code generation, so it only takes effect when get_spark
+    # starts the JVM.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    # The cache key is the class source, and by default the source names
+    # the class after its codegen stage id. Under AQE sibling stages take
+    # ids in completion order, so one repeated loop probe produced two
+    # sources (GeneratedIteratorForCodegenStage5/6) for one stage and
+    # compiled again whenever the race flipped. Without the id, identical
+    # stages share one class wherever they sit in a plan.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 #: local[*] puts driver AND all executor threads in ONE JVM, whose default

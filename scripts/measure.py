@@ -1,13 +1,14 @@
-"""Round-11 optimization measurement harness.
+"""Per-query timing and plan capture for an optimization round.
 
-Times individual registered queries exactly like bench.py (cold cache per
-run, noop sink, best-of-N) and captures ``.explain('formatted')`` to
-``plans/r12/<name>_<tag>.txt``. Not part of the driver contract — a
-developer tool for the optimization rounds.
+Times individual registered queries with bench.py's run protocol (SQL
+cache and RDD-layer blocks cleared before every run, noop sink,
+best-of-N) and writes ``.explain('formatted')`` to
+``plans/r<round>/<name>_<tag>.txt`` (gitignored: regenerate on demand).
+Not part of the driver contract — a developer tool.
 
 Usage:
-    python scripts/measure_r12.py --tag before --runs 3 name1 name2 ...
-    python scripts/measure_r12.py --tag before --runs 2 --all-headline
+    python scripts/measure.py --round 13 --tag before --runs 3 name1 name2 ...
+    python scripts/measure.py --round 13 --tag before --runs 2 --all-headline
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--all-headline", action="store_true")
@@ -36,6 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from binance_etl_clickhouse_spark.queries import QUERIES
+    from binance_etl_clickhouse_spark.queries.registry import clear_rdd_blocks
     from binance_etl_clickhouse_spark.session import get_spark
 
     names = list(args.names)
@@ -44,41 +47,32 @@ def main() -> None:
 
         names = [n for n in bench.HEADLINE if n not in names] + names
 
-    spark = get_spark(app_name="measure_r12", shuffle_partitions=8)
+    label = f"r{args.round}"
+    spark = get_spark(app_name=f"measure_{label}", shuffle_partitions=8)
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
 
-    plans_dir = Path(_REPO_ROOT) / "plans" / "r12"
+    plans_dir = Path(_REPO_ROOT) / "plans" / label
     plans_dir.mkdir(parents=True, exist_ok=True)
     out: dict[str, float] = {}
     for name in names:
         entry = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"r12:{name}")
+        spark.sparkContext.setJobDescription(f"{label}:{name}")
         best = float("inf")
         for i in range(args.runs):
             spark.catalog.clearCache()
+            clear_rdd_blocks(spark)
             t0 = time.perf_counter()
             df = entry.spark(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = min(best, dt)
+            best = min(best, time.perf_counter() - t0)
             if i == 0 and not args.no_plan:
-                try:
-                    plan = df._jdf.queryExecution().explainString(
-                        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                            "formatted"
-                        )
-                    )
-                except Exception:
-                    import contextlib, io
-
-                    buf = io.StringIO()
-                    with contextlib.redirect_stdout(buf):
-                        df.explain("formatted")
-                    plan = buf.getvalue()
+                plan = spark._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
                 (plans_dir / f"{name}_{args.tag}.txt").write_text(plan)
         out[name] = round(best, 4)
         print(f"{best:8.3f}  {name}", flush=True)
-    print(json.dumps({"tag": args.tag, "sf_dir": SF_DIR, "timings": out}))
+    print(json.dumps({"round": args.round, "tag": args.tag, "sf_dir": SF_DIR, "timings": out}))
 
 
 if __name__ == "__main__":

@@ -1,11 +1,11 @@
-"""Round-11 per-query oracle verification at arbitrary SF.
+"""Per-query oracle verification at arbitrary SF.
 
 Mirrors the driver's compare (tests/test_oracle_parity.py) but callable
 per-query per-SF from the command line, so an optimization's equivalence
 proof covers sf0.001 / sf0.01 / sf0.1 before the change is committed.
 
 Usage:
-    python scripts/verify_r12.py name1 name2 ... [--sf 0.001 0.01 0.1]
+    python scripts/verify.py name1 name2 ... [--sf 0.001 0.01 0.1]
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def main() -> None:
     from binance_etl_clickhouse_spark.session import get_spark
     from binance_etl_clickhouse_spark.testing import compare_frames, run_oracle
 
-    spark = get_spark(app_name="verify_r12", shuffle_partitions=8)
+    spark = get_spark(app_name="verify", shuffle_partitions=8)
     failures = 0
     for sf in args.sf:
         sf_dir = f"/root/testdata/sf{sf}"

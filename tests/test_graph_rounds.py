@@ -74,7 +74,7 @@ def test_lsss_round_job_budget(spark):
         ).collect(),
     )
     # its edge count falls every round until the fixpoint, so the exact
-    # symmetric-difference probe runs once, as it does for the star
+    # equal-count probe runs once, as it does for the star
     pairs = _random_graph(60, 120, seed=0)
     rc: list = []
     rows, j = _jobs(

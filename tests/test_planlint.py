@@ -7,7 +7,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from binance_etl_clickhouse_spark.planlint import lint_plan
+from binance_etl_clickhouse_spark.planlint import lint_plan, lint_plan_string
 
 
 def _df(spark):
@@ -75,14 +75,12 @@ def test_topk_take_ordered_clean(spark):
     assert lint_plan(_df(spark).orderBy(F.desc("id")).limit(5)) == []
 
 
-def test_registered_queries_lint_clean_modulo_whitelist(spark):
+def test_registered_queries_lint_clean_modulo_whitelist(registered_plans):
     """Every registered query passes the linter except the audited-benign
     set (tiny broadcast sides / query-sized frames — the same cases the
     nested-loop audit whitelists, plus documented single-task shapes)."""
-    from binance_etl_clickhouse_spark.queries import QUERIES
     from tests.test_plans import NESTED_LOOP_WHITELIST
 
-    SF = "/root/testdata/sf0.001"
     # audited-benign global windows: each runs over an ALREADY-REDUCED
     # frame whose cardinality is bounded by something other than the data
     # volume, so the single-task sort the linter (correctly) flags is
@@ -110,8 +108,8 @@ def test_registered_queries_lint_clean_modulo_whitelist(spark):
         # per-symbol windows instead (documented in SCALE.md)
     }
     dirty = {}
-    for name, e in QUERIES.items():
-        out = lint_plan(e.spark(spark, SF))
+    for name, (plan, _) in registered_plans.items():
+        out = lint_plan_string(plan)
         if out and name not in NESTED_LOOP_WHITELIST | extra_ok:
             dirty[name] = sorted(_kinds(out))
     assert not dirty, f"registered queries with un-audited lint hits: {dirty}"

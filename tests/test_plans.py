@@ -379,7 +379,7 @@ NESTED_LOOP_WHITELIST = {
 }
 
 
-def test_no_accidental_nested_loop_join_anywhere(spark):
+def test_no_accidental_nested_loop_join_anywhere(registered_plans):
     """Every registered query must plan without BroadcastNestedLoopJoin /
     CartesianProduct unless it is on the audited whitelist above — the
     repo-wide guard against the one plan shape that cannot survive scale.
@@ -394,9 +394,7 @@ def test_no_accidental_nested_loop_join_anywhere(spark):
 
     flagged = {}
     nonscalar = {}
-    for name, e in QUERIES.items():
-        df = e.spark(spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, (plan, schema) in registered_plans.items():
         kinds = [
             k
             for k, pat in (
@@ -407,10 +405,10 @@ def test_no_accidental_nested_loop_join_anywhere(spark):
         ]
         if kinds:
             flagged[name] = kinds
-        if e.oracle is not None:
+        if QUERIES[name].oracle is not None:
             bad = [
                 f.name
-                for f in df.schema.fields
+                for f in schema.fields
                 if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
             ]
             if bad:
