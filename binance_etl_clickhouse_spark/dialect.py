@@ -7,12 +7,13 @@ scalars (``toFloat64``) — rewritten at the string level into Spark SQL
 before parsing, so reference-flavored ClickHouse queries run verbatim
 through :meth:`AnalyticsEngine.sql(..., dialect="clickhouse")`.
 
-The rewriter is a tiny recursive scanner, not a regex pile: it walks the
-text once, skips string literals, recursively translates call arguments
-first (so nested combinators compose), and splits arguments only at
-TOP-LEVEL commas. Unknown functions pass through untouched — the output is
-always a superset-compatible Spark SQL string, never a silent semantic
-change.
+The rewriter is a tiny recursive token walker, not a regex pile: it reads
+the text through the one SQL lexer (``sqltext``: quoted tokens with both
+escape styles, comments, words, bracket depth and matches), recursively
+translates call arguments first (so nested combinators compose), and
+splits arguments only at TOP-LEVEL commas. Unknown functions pass through
+untouched — the output is always a superset-compatible Spark SQL string,
+never a silent semantic change.
 
 Scope (the idioms a user migrating the reference's ClickHouse SQL actually
 types; anything outside it passes through and fails loudly in Spark's
@@ -323,6 +324,8 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass as _dataclass
+
+from binance_etl_clickhouse_spark import sqltext
 
 #: binary bit functions -> Spark operators (no bitand/bitor scalar
 #: builtins in Spark; bit_and/bit_or are AGGREGATES)
@@ -770,19 +773,6 @@ _TRAILING_FORMAT_RE = re.compile(
 )
 
 
-def _strip_outside_quotes(regex: re.Pattern, sql: str) -> str:
-    """Delete every ``regex`` match, matching against the quote-blanked
-    text so 'GLOBAL IN' inside a string literal survives (unlike the FINAL
-    regex, these hint words plausibly appear in stored query text)."""
-    blanked = _blank_quoted(sql)
-    out, last = [], 0
-    for m in regex.finditer(blanked):
-        out.append(sql[last : m.start()])
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
-
-
 #: dateDiff('unit', a, b) -> boundary-crossing difference expressions.
 #: Epoch-second DIV is exact floor for the post-1970 data this engine
 #: carries; calendar units difference the calendar field positions.
@@ -846,41 +836,6 @@ _QUANTILES = {
     "quantileBFloat16": "percentile_approx",
 }
 
-_IDENT = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_")
-
-
-#: opaque quoted-token delimiters: ' (string literal), " and ` (quoted
-#: identifiers in ClickHouse / Spark). All three must be skipped as units —
-#: a comma or paren inside ANY of them would otherwise miscount call
-#: arguments and the rejoin would silently mutate the token's content.
-_QUOTES = "'\"`"
-
-
-def _skip_string(s: str, i: int) -> int:
-    """``s[i]`` is an opening quote (one of ``_QUOTES``); return the index
-    just PAST the matching close. Handles BOTH ClickHouse escape styles —
-    backslash (``'O\\'Brien'``) and doubled quote (``'O''Brien'``, and the
-    same doubling for quoted identifiers) — so a quote after a backslash
-    never terminates the token (the bug class where an escaped quote
-    flipped parity and garbled the rest of the statement). Unterminated
-    tokens return len(s)."""
-    q = s[i]
-    j = i + 1
-    n = len(s)
-    while j < n:
-        ch = s[j]
-        if ch == "\\":
-            j += 2
-            continue
-        if ch == q:
-            if j + 1 < n and s[j + 1] == q:  # doubled-quote escape
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
 #: an identifier directly before ``[`` that means the bracket STARTS a
 #: fresh expression (array literal), not a subscript on that identifier —
 #: clause keywords and operators, ``x IN [1, 2]`` being the archetype.
@@ -926,25 +881,6 @@ _BRACKET_LITERAL_PRECEDERS = frozenset(
 )
 
 
-def _find_close_bracket(s: str, open_idx: int) -> int:
-    """Index of the ``]`` matching ``s[open_idx] == '['`` (quote-aware;
-    parens and nested brackets both tracked). -1 if unbalanced."""
-    depth, i = 0, open_idx
-    while i < len(s):
-        ch = s[i]
-        if ch in _QUOTES:
-            i = _skip_string(s, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
 def _rewrite_brackets(sql: str) -> str:
     """ClickHouse bracket syntax -> Spark spellings:
 
@@ -957,52 +893,39 @@ def _rewrite_brackets(sql: str) -> str:
       (found r11). Maps go through the same call (key lookup; missing key
       reads NULL — the engine's documented Map divergence).
 
-    Forward scan tracking the start of the last complete postfix
+    Forward token walk tracking the start of the last complete postfix
     expression in the output; a bracket after an identifier / ``)`` /
     ``]`` / quoted token is a subscript on it unless the identifier is a
     clause keyword (``x IN [1, 2]``). Chains (``m['a'][2]``) wrap
     left-to-right; inner content recurses. Runs as a pre-pass on the raw
     text, so the emitted calls flow through the normal translator and the
     output (bracket-free) is a fixed point."""
+    toks = sqltext.tokens(sql)
     out = ""
     primary_start: int | None = None  # index into out
     prev_kw: str | None = None  # keyword immediately before, if any
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTES:
-            j = _skip_string(sql, i)
-            primary_start = len(out)
-            prev_kw = None
-            out += sql[i:j]
-            i = j
-            continue
-        if ch in _IDENT:
-            j = i
-            while j < n and sql[j] in _IDENT:
-                j += 1
-            word = sql[i:j]
-            if word.upper() in _BRACKET_LITERAL_PRECEDERS:
-                primary_start = None
-                prev_kw = word.upper()
+    k = 0
+    while k < len(toks):
+        t = toks[k]
+        k += 1
+        if t.kind == sqltext.WORD:
+            if t.text.upper() in _BRACKET_LITERAL_PRECEDERS:
+                primary_start, prev_kw = None, t.text.upper()
             else:
-                primary_start = len(out)
-                prev_kw = None
-            out += word
+                primary_start, prev_kw = len(out), None
+            out += t.text
             # a dotted chain (db.tbl.col) is one primary
-            while j < n and sql[j] == "." and j + 1 < n and sql[j + 1] in _IDENT:
-                out += "."
-                j += 1
-                k = j
-                while k < n and sql[k] in _IDENT:
-                    k += 1
-                out += sql[j:k]
-                j = k
-            i = j
+            while (
+                k + 1 < len(toks)
+                and toks[k].text == "."
+                and toks[k + 1].kind == sqltext.WORD
+            ):
+                out += "." + toks[k + 1].text
+                k += 2
             continue
-        if ch == "(":
-            close = _find_close(sql, i)  # raises on unbalanced (loud)
-            inner = _rewrite_brackets(sql[i + 1 : close])
+        if t.text == "(":
+            close = sqltext.close_of(toks, k - 1)  # raises on unbalanced (loud)
+            inner = _rewrite_brackets(sql[t.end : toks[close].start])
             group_start = len(out)
             out += f"({inner})"
             if primary_start is None:
@@ -1011,14 +934,13 @@ def _rewrite_brackets(sql: str) -> str:
                 # callee identifier set it just before
                 primary_start = group_start
             prev_kw = None
-            i = close + 1
+            k = close + 1
             continue
-        if ch == "[":
-            close = _find_close_bracket(sql, i)
-            if close < 0:  # unbalanced: leave verbatim
-                out += sql[i:]
+        if t.text == "[":
+            if t.close < 0:  # unbalanced: leave verbatim
+                out += sql[t.start :]
                 break
-            inner = _rewrite_brackets(sql[i + 1 : close])
+            inner = _rewrite_brackets(sql[t.end : toks[t.close].start])
             if primary_start is not None:
                 base = out[primary_start:].rstrip()
                 out = out[:primary_start] + f"try_element_at({base}, {inner})"
@@ -1031,112 +953,13 @@ def _rewrite_brackets(sql: str) -> str:
             else:
                 primary_start = len(out)
                 out += f"array({inner})"
-            i = close + 1
+            k = t.close + 1
             continue
-        out += ch
-        if not ch.isspace():
-            primary_start = None
-            prev_kw = None
-        i += 1
-    return out
-
-
-def _strip_comments(s: str) -> str:
-    """Remove ``-- line`` and ``/* block */`` comments outside string
-    literals (a ``--`` inside a comment containing a quote would otherwise
-    flip string parity for every scanner downstream)."""
-    out, i, n = [], 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in _QUOTES:
-            j = _skip_string(s, i)
-            out.append(s[i:j])
-            i = j
-            continue
-        if ch == "-" and i + 1 < n and s[i + 1] == "-":
-            while i < n and s[i] != "\n":
-                i += 1
-            out.append(" ")  # a comment is a token separator, not glue
-            continue
-        if ch == "/" and i + 1 < n and s[i + 1] == "*":
-            end = s.find("*/", i + 2)
-            i = n if end < 0 else end + 2
-            # replace with a space: '...t/* hint */WHERE...' must not
-            # merge into the identifier 'tWHERE'
-            out.append(" ")
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _split_args(s: str) -> list[str]:
-    """Split a call's argument string at top-level commas (paren- and
-    quote-aware)."""
-    out, depth, cur, i = [], 0, [], 0
-    while i < len(s):
-        ch = s[i]
-        if ch in _QUOTES:
-            j = _skip_string(s, i)
-            cur.append(s[i:j])
-            i = j
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
-def _find_close(s: str, open_idx: int) -> int:
-    """Index of the ``)`` matching ``s[open_idx] == '('`` (quote-aware)."""
-    depth, i = 0, open_idx
-    while i < len(s):
-        ch = s[i]
-        if ch in _QUOTES:
-            i = _skip_string(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError(f"unbalanced parentheses in SQL near index {open_idx}")
-
-
-def _top_level_keyword_spans(sql: str) -> list[tuple[int, int, str]]:
-    """(start, end, UPPER-token) for every bare word at paren depth 0
-    outside string literals — the clause scanner LIMIT BY rewriting needs."""
-    out, depth, i, n = [], 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTES:
-            i = _skip_string(sql, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in _IDENT and (i == 0 or sql[i - 1] not in _IDENT):
-            # digit-led tokens included: the LIMIT <n> BY pattern needs them
-            j = i
-            while j < n and sql[j] in _IDENT:
-                j += 1
-            out.append((i, j, sql[i:j].upper()))
-            i = j
-            continue
-        i += 1
+        if t.kind == sqltext.QUOTED:
+            primary_start, prev_kw = len(out), None
+        elif t.kind != sqltext.SPACE:
+            primary_start = prev_kw = None
+        out += t.text
     return out
 
 
@@ -1172,7 +995,7 @@ def _merge_prewhere_where(sql: str) -> str:
     so each SELECT scope sees its own clause pair; the stop-keyword set
     keeps the merge from reaching across UNION/INTERSECT boundaries."""
     while True:
-        toks = _top_level_keyword_spans(sql)
+        toks = sqltext.top_level_words(sql)
         merged = False
         for idx, (i, j, up) in enumerate(toks):
             if up != "PREWHERE":
@@ -1221,7 +1044,7 @@ def _rewrite_limit_offset(sql: str) -> str:
     ``LIMIT n OFFSET m`` (the form Spark parses). Top-level only and only
     when NOT followed by BY (the per-group form is _rewrite_limit_by's);
     runs after it, so a statement can carry both."""
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     if not toks or toks[0][2] not in ("SELECT", "WITH"):
         return sql
     for idx in range(len(toks) - 2):
@@ -1253,12 +1076,12 @@ def _carry_order_columns(select: str, order_exprs: str) -> tuple[str, str, list[
     away) those. Returns ``(select, order_exprs, hidden names)``; a
     ``*`` list, DISTINCT or a set operation is left as it was (an extra
     column would change what DISTINCT or the set operation compares)."""
-    toks = _top_level_keyword_spans(select)
+    toks = sqltext.top_level_words(select)
     words = [t[2] for t in toks]
     frm = next((t[0] for t in toks if t[2] == "FROM"), len(select))
     if words.count("SELECT") != 1 or {"DISTINCT", "UNION", "INTERSECT", "EXCEPT"} & set(words):
         return select, order_exprs, []
-    items = _split_args(select[toks[words.index("SELECT")][1] : frm])
+    items = sqltext.split_top_level(select[toks[words.index("SELECT")][1] : frm])
     if any(it.strip().endswith("*") for it in items):
         return select, order_exprs, []
     names = {it.strip().lower() for it in items} | {
@@ -1266,7 +1089,7 @@ def _carry_order_columns(select: str, order_exprs: str) -> tuple[str, str, list[
     }
     carried: dict[str, str] = {}  # hidden name -> expression
     parts = []
-    for part in _split_args(order_exprs):
+    for part in sqltext.split_top_level(order_exprs):
         part = part.strip()
         m = _ORDER_SUFFIX.search(part)
         expr, suffix = part[: m.start()], part[m.start() :]
@@ -1296,7 +1119,7 @@ def _rewrite_limit_by(sql: str) -> str:
     a non-query in a subselect and garble the statement. Non-query
     fragments pass through and a nested LIMIT BY then fails loudly in
     Spark's analyzer rather than silently misbehaving."""
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     if not toks or toks[0][2] not in ("SELECT", "WITH"):
         return sql
     # find LIMIT <int> [, <int> | OFFSET <int>] BY
@@ -1798,26 +1621,11 @@ _ASOF_LEFTOVER_RE = re.compile(
 )
 
 
-def _blank_quoted(s: str) -> str:
-    """Copy of ``s`` with every quoted token replaced by spaces — lets the
-    regex-based scans below ignore string/identifier contents."""
-    out, i, n = [], 0, len(s)
-    while i < n:
-        if s[i] in _QUOTES:
-            j = _skip_string(s, i)
-            out.append(" " * (j - i))
-            i = j
-            continue
-        out.append(s[i])
-        i += 1
-    return "".join(out)
-
-
 def _refs_alias(expr: str, alias: str) -> bool:
     """True iff ``expr`` contains a qualified reference ``alias.<col>``."""
     return bool(
         re.search(
-            rf"(?<![\w.]){re.escape(alias)}\s*\.", _blank_quoted(expr), re.IGNORECASE
+            rf"(?<![\w.]){re.escape(alias)}\s*\.", sqltext.blank_quoted(expr), re.IGNORECASE
         )
     )
 
@@ -1826,7 +1634,7 @@ def _split_top_level_and(cond: str) -> list[str]:
     """Split a boolean expression on its top-level ANDs (quote/paren aware);
     a top-level OR is not decomposable into asof conjuncts -> ValueError."""
     parts, last = [], 0
-    for s, e, tok in _top_level_keyword_spans(cond):
+    for s, e, tok in sqltext.top_level_words(cond):
         if tok == "AND":
             parts.append(cond[last:s])
             last = e
@@ -1836,70 +1644,41 @@ def _split_top_level_and(cond: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-def _find_top_cmp(expr: str) -> tuple[str, int] | None:
-    """(operator, index) of the top-level comparison in a conjunct."""
-    depth, i, n = 0, 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch in _QUOTES:
-            i = _skip_string(expr, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in "<>=!":
-            for op in _ASOF_CMP:
-                if expr.startswith(op, i):
-                    return op, i
-        i += 1
-    return None
+#: a join term's table name (dotted ok), a bare alias word, and the word
+#: after an AS (digit-led allowed, like the table name)
+_TERM_NAME_RE = re.compile(r"\s*([A-Za-z0-9_.]*)")
+_ALIAS_WORD_RE = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)")
+_AS_TARGET_RE = re.compile(r"\s*([A-Za-z0-9_]*)")
 
 
 def _parse_join_term(sql: str, i: int) -> tuple[str, str | None, int]:
     """Parse a join term at ``i``: a table name (dotted ok) or a
     parenthesized subquery, then an optional ``[AS] alias``. Returns
     (term_text, alias, index_past)."""
-    n = len(sql)
-    while i < n and sql[i].isspace():
-        i += 1
-    if i < n and sql[i] == "(":
-        close = _find_close(sql, i)
-        term = sql[i : close + 1]
-        j = close + 1
+    m = _TERM_NAME_RE.match(sql, i)
+    i = m.start(1)
+    if sql.startswith("(", i):
+        j = sqltext.find_close(sql, i) + 1
     else:
-        j = i
-        while j < n and (sql[j] in _IDENT or sql[j] == "."):
-            j += 1
-        term = sql[i:j]
-        if not term:
+        j = m.end(1)
+        if j == i:
             raise ValueError(f"ASOF JOIN: expected a table or subquery at {i}")
+    term = sql[i:j]
     # optional alias (AS word | bare word that is not a keyword)
-    k = j
-    while k < n and sql[k].isspace():
-        k += 1
-    if k < n and sql[k] in _IDENT and not sql[k].isdigit():
-        m = k
-        while m < n and sql[m] in _IDENT:
-            m += 1
-        word = sql[k:m]
-        up = word.upper()
+    a = _ALIAS_WORD_RE.match(sql, j)
+    if a is not None:
+        word, up = a.group(1), a.group(1).upper()
         if up == "AS":
-            k2 = m
-            while k2 < n and sql[k2].isspace():
-                k2 += 1
-            m2 = k2
-            while m2 < n and sql[m2] in _IDENT:
-                m2 += 1
-            if k2 == m2:
+            target = _AS_TARGET_RE.match(sql, a.end())
+            if not target.group(1):
                 raise ValueError("ASOF JOIN: dangling AS")
-            return term, sql[k2:m2], m2
+            return term, target.group(1), target.end()
         if (
             up not in _ASOF_JOIN_KW
             and up not in _ASOF_STOP
             and up not in ("ON", "USING")
         ):
-            return term, word, m
+            return term, word, a.end()
     return term, None, j
 
 
@@ -1929,7 +1708,7 @@ def _parse_single_join(sql: str, kw: str, prefixes: tuple[str, ...]):
     function named like the keyword — e.g. the any() aggregate — must not
     hide or fake a join, so EVERY top-level token is tried)."""
     label = f"{kw} JOIN"
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     hit = None
     for pos in (x for x in range(len(toks)) if toks[x][2] == kw):
         is_left = is_right = False
@@ -1979,8 +1758,8 @@ def _parse_single_join(sql: str, kw: str, prefixes: tuple[str, ...]):
             j2 += 1
         if j2 >= len(sql) or sql[j2] != "(":
             raise ValueError(f"{label}: USING needs a parenthesized column list")
-        close_u = _find_close(sql, j2)
-        cols = [c.strip() for c in _split_args(sql[j2 + 1 : close_u])]
+        close_u = sqltext.find_close(sql, j2)
+        cols = [c.strip() for c in sqltext.split_top_level(sql[j2 + 1 : close_u])]
         return _ParsedJoin(
             from_tok[1], left_term, la, right_term, ra, is_left, is_right,
             on_tok[0], -1, -1, cols, close_u + 1,
@@ -1993,7 +1772,7 @@ def _parse_single_join(sql: str, kw: str, prefixes: tuple[str, ...]):
             break
         if t[0] >= cond_start and t[2] in _ASOF_JOIN_KW:
             raise ValueError(f"{label}: only one join per FROM clause")
-    semi = _blank_quoted(sql[cond_start:cond_end]).find(";")
+    semi = sqltext.blank_quoted(sql[cond_start:cond_end]).find(";")
     if semi != -1:
         cond_end = cond_start + semi
     return _ParsedJoin(
@@ -2012,7 +1791,17 @@ def _classify_join_conjuncts(
     eqs: list[tuple[str, str]] = []
     ordered: list[tuple[str, str, str]] = []
     for conj in _split_top_level_and(sql[p.cond_start : p.cond_end]):
-        hit = _find_top_cmp(conj)
+        # the first top-level comparison operator
+        hit = next(
+            (
+                (op, t.start)
+                for t in sqltext.tokens(conj)
+                if t.depth == 0 and t.kind == sqltext.PUNCT
+                for op in _ASOF_CMP
+                if conj.startswith(op, t.start)
+            ),
+            None,
+        )
         if hit is None:
             raise ValueError(f"{label}: no comparison in conjunct {conj!r}")
         op, pos = hit
@@ -2121,7 +1910,7 @@ def _rewrite_with_totals(sql: str) -> str:
     grand-total row with every group column NULL — the same values a
     client reads from the totals block. A CTE named ``totals`` does not
     trigger (the WITH must follow a top-level GROUP)."""
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     for x in range(len(toks) - 1):
         if toks[x][2] != "WITH" or toks[x + 1][2] != "TOTALS":
             continue
@@ -2252,7 +2041,7 @@ _ARRAY_JOIN_LEFTOVER_RE = re.compile(r"\bARRAY\s+JOIN\b", re.IGNORECASE)
 def _split_trailing_as(item: str) -> tuple[str, str | None]:
     """Split one ARRAY JOIN item into (expr, alias): alias iff the item
     ends with a top-level ``AS <ident>``."""
-    ts = _top_level_keyword_spans(item)
+    ts = sqltext.top_level_words(item)
     if len(ts) >= 2 and ts[-2][2] == "AS":
         a_end = ts[-2][1]
         id_start, id_end, ident = ts[-1]
@@ -2271,7 +2060,7 @@ def _rewrite_array_join(sql: str) -> str:
     """``FROM <term> [alias] [LEFT] ARRAY JOIN item, ...`` -> the LATERAL
     VIEW derived table (comment above). First top-level clause of the
     fragment; subqueries are handled when the translator descends."""
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     hit = None
     for x in range(len(toks) - 1):
         if (
@@ -2321,10 +2110,10 @@ def _rewrite_array_join(sql: str) -> str:
             break
         if t[2] in _ASOF_JOIN_KW:
             raise ValueError("ARRAY JOIN: a join after the clause is not supported")
-    semi = _blank_quoted(sql[join_end:items_end]).find(";")
+    semi = sqltext.blank_quoted(sql[join_end:items_end]).find(";")
     if semi != -1:
         items_end = join_end + semi
-    items = _split_args(sql[join_end:items_end])
+    items = sqltext.split_top_level(sql[join_end:items_end])
     if not items:
         raise ValueError("ARRAY JOIN: needs at least one array item")
     # ---- parse items: (element expr, output name, replaced column or None)
@@ -2434,7 +2223,7 @@ _FILL_KW = {"TO", "STEP", "INTERPOLATE", "LIMIT", "UNION", "FROM"}
 
 
 def _rewrite_with_fill(sql: str) -> str:
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     if not toks or toks[0][2] not in ("SELECT", "WITH"):
         return sql
     hit = None
@@ -2467,7 +2256,7 @@ def _rewrite_with_fill(sql: str) -> str:
     # use_with_fill_by_sorting_prefix semantics, default-on since 23.5):
     # every window below partitions by them and generated rows CARRY them.
     # The LAST item is the fill column (bare ASC only, as before).
-    sort_items = _split_args(sort_span)
+    sort_items = sqltext.split_top_level(sort_span)
     leading: list[tuple[str, str]] = []  # (col, dir) prefix keys
     for item in sort_items[:-1]:
         lm = re.fullmatch(
@@ -2519,15 +2308,9 @@ def _rewrite_with_fill(sql: str) -> str:
             # unsupported-trailing-clause refusal below instead of being
             # silently absorbed into the value
             comma_cut = None
-            blanked, depth = _blank_quoted(sql[vstart:vend]), 0
-            for c, bch in enumerate(blanked):
-                if bch in "([":
-                    depth += 1
-                elif bch in ")]":
-                    depth -= 1
-                elif bch == "," and depth == 0:
-                    vend = comma_cut = vstart + c
-                    break
+            commas = sqltext.top_level_commas(sql[vstart:vend])
+            if commas:
+                vend = comma_cut = vstart + commas[0]
             val = sql[vstart:vend].strip().rstrip(";")
             if not val:
                 raise ValueError(f"WITH FILL: {kw} needs a value")
@@ -2548,8 +2331,8 @@ def _rewrite_with_fill(sql: str) -> str:
                 k += 1
             if k >= len(sql) or sql[k] != "(":
                 raise ValueError("WITH FILL: INTERPOLATE needs a column list")
-            close = _find_close(sql, k)
-            for item in _split_args(sql[k + 1 : close]):
+            close = sqltext.find_close(sql, k)
+            for item in sqltext.split_top_level(sql[k + 1 : close]):
                 if not re.fullmatch(r"[A-Za-z_]\w*", item):
                     raise ValueError(
                         "WITH FILL: INTERPOLATE supports bare columns (LOCF) "
@@ -2688,13 +2471,13 @@ def _rewrite_with_fill(sql: str) -> str:
 
 
 def _rewrite_scalar_with(sql: str) -> str:
-    toks = _top_level_keyword_spans(sql)
+    toks = sqltext.top_level_words(sql)
     if not toks or toks[0][2] != "WITH":
         return sql
     sel = next((t for t in toks if t[2] == "SELECT"), None)
     if sel is None:
         return sql
-    items = _split_args(sql[toks[0][1] : sel[0]])
+    items = sqltext.split_top_level(sql[toks[0][1] : sel[0]])
     ctes: list[str] = []
     scalars: list[tuple[str, str]] = []  # (ident, expr)
     for it in items:
@@ -2727,30 +2510,14 @@ def _rewrite_scalar_with(sql: str) -> str:
                 return m.group(0)  # alias position: keep the name
             return f"({expr})"
 
-        parts: list[str] = []
-        i, n = 0, len(text)
-        while i < n:
-            ch = text[i]
-            if ch in _QUOTES:
-                j = _skip_string(text, i)
-                parts.append(text[i:j])
-                i = j
-                continue
-            j = n
-            for q in _QUOTES:
-                k = text.find(q, i)
-                if k != -1:
-                    j = min(j, k)
-            parts.append(pat.sub(_sub, text[i:j]))
-            i = j
-        return "".join(parts)
+        return sqltext.sub_unquoted(pat, _sub, text)
 
     def _name_bare_select_items(text: str, idents: set[str]) -> str:
         # a scalar alias standing ALONE as a top-level select item keeps
         # its name in ClickHouse output — rewrite `SELECT ..., b, ...` to
         # `SELECT ..., b AS b, ...` before inlining so the result column
         # stays `b` (the AS-position guard above preserves it)
-        ts = _top_level_keyword_spans(text)
+        ts = sqltext.top_level_words(text)
         sel_t = next((t for t in ts if t[2] == "SELECT"), None)
         if sel_t is None:
             return text
@@ -2759,7 +2526,7 @@ def _rewrite_scalar_with(sql: str) -> str:
             if t[0] >= sel_t[1] and t[2] == "FROM":
                 end = t[0]
                 break
-        items = _split_args(text[sel_t[1] : end])
+        items = sqltext.split_top_level(text[sel_t[1] : end])
         if not any(it.strip() in idents for it in items):
             return text
         named = [
@@ -2785,9 +2552,8 @@ def _rewrite_scalar_with(sql: str) -> str:
 
 def translate_clickhouse_sql(sql: str) -> str:
     """Rewrite ClickHouse-flavored SQL into Spark SQL (see module doc)."""
-    # comments first: a quote inside a -- or /* */ comment would flip
-    # string parity for every scanner below
-    sql = _strip_comments(sql)
+    # comments first: every pass below reads the text without them
+    sql = sqltext.strip_comments(sql)
     # scalar WITH inlining first: aliases may appear inside any later
     # clause, so every other rewrite should see the resolved text
     sql = _rewrite_scalar_with(sql)
@@ -2809,8 +2575,10 @@ def translate_clickhouse_sql(sql: str) -> str:
     # so SETTINGS is only end-anchored once FORMAT is gone
     sql = _TRAILING_FORMAT_RE.sub(r"\1", sql)
     sql = _TRAILING_SETTINGS_RE.sub(r"\1", sql)
-    sql = _strip_outside_quotes(_GLOBAL_HINT_RE, sql)
-    sql = _strip_outside_quotes(_ALL_STRICTNESS_RE, sql)
+    # matched outside quotes: unlike the FINAL regex, these hint words
+    # plausibly appear in stored query text
+    sql = sqltext.sub_unquoted(_GLOBAL_HINT_RE, "", sql)
+    sql = sqltext.sub_unquoted(_ALL_STRICTNESS_RE, "", sql)
     sql = _rewrite_asof_join(sql)
     sql = _rewrite_any_join(sql)
     # before LIMIT BY: that rewrite wraps the FROM clause into a depth-1
@@ -2820,26 +2588,18 @@ def translate_clickhouse_sql(sql: str) -> str:
     sql = _rewrite_with_totals(sql)
     sql = _rewrite_limit_by(sql)
     sql = _rewrite_limit_offset(sql)
+    toks = sqltext.tokens(sql)
     out: list[str] = []
     i = 0
-    n = len(sql)
+    n = len(toks)
     while i < n:
-        ch = sql[i]
-        if ch in _QUOTES:  # quoted token: copy verbatim (escape-aware)
-            j = _skip_string(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch in _IDENT and not ch.isdigit() and (i == 0 or sql[i - 1] not in _IDENT):
-            j = i
-            while j < n and sql[j] in _IDENT:
-                j += 1
-            name = sql[i:j]
+        tok = toks[i]
+        i += 1
+        if tok.kind == sqltext.WORD and not tok.text[0].isdigit():
+            name = tok.text
             # lookahead for a call: optional whitespace then '('
-            k = j
-            while k < n and sql[k].isspace():
-                k += 1
-            if k < n and sql[k] == "(" and name.upper() in _NON_CALL_KEYWORDS:
+            k = sqltext.next_paren(toks, i - 1)
+            if k >= 0 and name.upper() in _NON_CALL_KEYWORDS:
                 # a clause keyword before a parenthesized expression is
                 # NOT a call: consuming the parens as an argument list
                 # would re-join them without the original whitespace
@@ -2848,11 +2608,10 @@ def translate_clickhouse_sql(sql: str) -> str:
                 # walk into the parens. (FROM/IN/EXISTS stay on the call
                 # path — that is how parenthesized subqueries descend.)
                 out.append(_KEYWORDS.get(name.upper(), name))
-                i = j
                 continue
-            if k < n and sql[k] == "(":
-                close = _find_close(sql, k)
-                inner_text = sql[k + 1 : close]
+            if k >= 0:
+                close = sqltext.close_of(toks, k)
+                inner_text = sql[toks[k].end : toks[close].start]
                 if re.match(r"\s*(SELECT|WITH)\b", inner_text, re.I):
                     # parenthesized SUBQUERY (``FROM (SELECT ...) q``,
                     # ``IN (SELECT ...)``): translate it as ONE unit — a
@@ -2864,7 +2623,7 @@ def translate_clickhouse_sql(sql: str) -> str:
                 else:
                     args = [
                         translate_clickhouse_sql(a)
-                        for a in _split_args(inner_text)
+                        for a in sqltext.split_top_level(inner_text)
                     ]
                 i = close + 1
                 if (
@@ -2883,14 +2642,14 @@ def translate_clickhouse_sql(sql: str) -> str:
                     )
                 ):
                     # parameterized combinator: fn(params)(x)
-                    k2 = i
-                    while k2 < n and sql[k2].isspace():
-                        k2 += 1
-                    if k2 < n and sql[k2] == "(":
-                        close2 = _find_close(sql, k2)
+                    k2 = sqltext.next_paren(toks, close)
+                    if k2 >= 0:
+                        close2 = sqltext.close_of(toks, k2)
                         inner = [
                             translate_clickhouse_sql(a)
-                            for a in _split_args(sql[k2 + 1 : close2])
+                            for a in sqltext.split_top_level(
+                                sql[toks[k2].end : toks[close2].start]
+                            )
                         ]
                         i = close2 + 1
                         if name == "windowFunnel":
@@ -4046,16 +3805,14 @@ def translate_clickhouse_sql(sql: str) -> str:
                 continue
             # bare identifier (no call): keyword rewrites (PREWHERE), else keep
             out.append(_KEYWORDS.get(name.upper(), name))
-            i = j
             continue
-        out.append(ch)
-        i += 1
+        out.append(tok.text)  # quoted tokens and the rest copy verbatim
     result = "".join(out)
     # fail-loud backstop: ASOF JOIN syntax the fragment scanners could not
     # reach (e.g. split mid-subquery) must never reach Spark's parser — it
     # would silently parse as an alias plus a plain INNER join with the
     # ordering condition folded into the join predicate
-    blanked = _blank_quoted(result)
+    blanked = sqltext.blank_quoted(result)
     if re.search(r"\bLIMIT\s+\S+\s+WITH\s+TIES\b", blanked, re.I):
         raise ValueError(
             "LIMIT ... WITH TIES has no Spark equivalent; use a rank() "

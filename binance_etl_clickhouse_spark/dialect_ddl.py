@@ -137,6 +137,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from binance_etl_clickhouse_spark import sqltext
 from binance_etl_clickhouse_spark.operators.dedup import keep_last
 from binance_etl_clickhouse_spark.schemas import MONTH_COL
 from binance_etl_clickhouse_spark.storage.table import INGEST_SEQ, ServingTable
@@ -428,21 +429,25 @@ def is_clickhouse_ddl(sql: str) -> bool:
     return _DDL_RE.match(sql) is not None
 
 
-def _match_generic_run(s: str, start: int) -> int:
-    """``s[start] == '<'``: return the index one past the BALANCED closing
-    ``>`` if the bracket run contains only type-ish characters (a generic
-    type spelling like ``map<string,array<bigint>>``), else -1 — a bare
+def _match_generic_run(toks: tuple[sqltext.Token, ...], start: int) -> int:
+    """``toks[start]`` is ``<``: the index one past the BALANCED closing
+    ``>`` if the bracket run holds only type-ish tokens (a generic type
+    spelling like ``map<string,array<bigint>>``), else -1 — a bare
     comparison (``DEFAULT x < 1``) stays an ordinary character."""
     depth = 0
-    for i in range(start, len(s)):
-        ch = s[i]
-        if ch == "<":
+    for k in range(start, len(toks)):
+        t = toks[k]
+        if t.text == "<":
             depth += 1
-        elif ch == ">":
+        elif t.text == ">":
             depth -= 1
             if depth == 0:
-                return i + 1
-        elif not (ch.isalnum() or ch in "_,():` \t\n"):
+                return k + 1
+        elif not (
+            t.kind in (sqltext.WORD, sqltext.SPACE)
+            or t.text in ",():"
+            or t.text[0] == "`"
+        ):
             # ':' for struct<name:type> fields — safe now that runs only
             # start after a known container head (array/map/struct)
             return -1
@@ -457,59 +462,25 @@ def _match_generic_run(s: str, start: int) -> int:
 _GENERIC_HEADS = frozenset({"array", "map", "struct"})
 
 
-def _generic_head(cur: list[str]) -> str | None:
-    """The identifier immediately preceding a ``<`` (no whitespace between),
-    if it is a known generic container head; else None."""
-    j = len(cur) - 1
-    # cur holds single chars and swallowed runs; walk back over ident chars
-    ident: list[str] = []
-    while j >= 0 and len(cur[j]) == 1 and (cur[j].isalnum() or cur[j] == "_"):
-        ident.append(cur[j])
-        j -= 1
-    head = "".join(reversed(ident)).lower()
-    return head if head in _GENERIC_HEADS else None
-
-
 def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren depth 0 (types/defaults contain parens;
-    Spark generic spellings like ``map<string,bigint>`` carry top-level
-    commas inside ``<...>`` and are skipped as a unit)."""
-    parts, depth, cur, quote = [], 0, [], None
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in "'\"`":
-            quote = ch
-            cur.append(ch)
-        elif ch == "<" and cur and _generic_head(cur) is not None:
-            end = _match_generic_run(s, i)
+    """Split on depth-0 commas, like ``sqltext.split_top_level`` (types and
+    defaults contain parens and quoted literals) — except that a Spark
+    generic spelling like ``map<string,bigint>``, whose ``<...>`` run
+    carries commas of its own, is skipped as a unit. A run starts at a
+    ``<`` directly after a known container head word."""
+    toks = sqltext.tokens(s)
+    cuts, k = [], 0
+    while k < len(toks):
+        t = toks[k]
+        if t.text == "<" and k and toks[k - 1].text.lower() in _GENERIC_HEADS:
+            end = _match_generic_run(toks, k)
             if end > 0:  # swallow the whole generic run, commas and all
-                cur.append(s[i:end])
-                i = end
+                k = end
                 continue
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
+        if t.depth == 0 and t.text == ",":
+            cuts.append(t.start)
+        k += 1
+    return sqltext.split_at(s, cuts)
 
 
 def _cols_list(clause: str) -> list[str]:
@@ -1094,12 +1065,9 @@ class DdlCatalog:
         # on that table's inserts. Joins/subqueries and MV-on-MV chains are
         # refused loudly (ClickHouse triggers only on the FIRST table too,
         # a classic footgun this engine declines to reproduce silently).
-        from binance_etl_clickhouse_spark.dialect import _blank_quoted
-
-        froms = re.findall(r"\bFROM\s+([\w.]+)", _blank_quoted(select), re.I)
-        if len(froms) != 1 or re.search(
-            r"\bJOIN\b", _blank_quoted(select), re.I
-        ):
+        blanked = sqltext.blank_quoted(select)
+        froms = re.findall(r"\bFROM\s+([\w.]+)", blanked, re.I)
+        if len(froms) != 1 or re.search(r"\bJOIN\b", blanked, re.I):
             raise ValueError(
                 "materialized view SELECT must read exactly one table "
                 f"(found FROM {froms!r})"
@@ -2577,44 +2545,28 @@ class DdlCatalog:
         """
         if "dictGet" not in sql and "dictHas" not in sql:
             return sql
-        from binance_etl_clickhouse_spark import dialect as _d
-
+        toks = sqltext.tokens(sql)
         out: list[str] = []
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in "'\"`":
-                j = _d._skip_string(sql, i)
-                out.append(sql[i:j])
-                i = j
-                continue
-            if (ch.isalpha() or ch == "_") and (
-                i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_.")
+        i = 0
+        while i < len(toks):
+            t = toks[i]
+            k = sqltext.next_paren(toks, i)
+            if (
+                (t.text.startswith("dictGet") or t.text == "dictHas")
+                and k >= 0
+                and not (i and toks[i - 1].text == ".")  # not a qualified name
             ):
-                j = i
-                while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                    j += 1
-                name = sql[i:j]
-                k = j
-                while k < n and sql[k].isspace():
-                    k += 1
-                if (
-                    k < n
-                    and sql[k] == "("
-                    and (name.startswith("dictGet") or name == "dictHas")
-                ):
-                    close = _d._find_close(sql, k)
-                    args = [
-                        self.rewrite_dict_functions(a)
-                        for a in _d._split_args(sql[k + 1 : close])
-                    ]
-                    out.append(self._dict_call_sql(name, args))
-                    i = close + 1
-                    continue
-                out.append(name)
-                i = j
+                close = sqltext.close_of(toks, k)
+                args = [
+                    self.rewrite_dict_functions(a)
+                    for a in sqltext.split_top_level(
+                        sql[toks[k].end : toks[close].start]
+                    )
+                ]
+                out.append(self._dict_call_sql(t.text, args))
+                i = close + 1
                 continue
-            out.append(ch)
+            out.append(t.text)
             i += 1
         return "".join(out)
 
@@ -2624,14 +2576,12 @@ class DdlCatalog:
         scope wins, so `dictGet('d', 'a', asset)` over a source that also
         has `asset` would silently become an uncorrelated self-lookup.
         Qualified references (``t.asset``) pass."""
-        from binance_etl_clickhouse_spark.dialect import _blank_quoted
-
         try:
             src_cols = {c.lower() for c in self.spark.table(d.source_table).columns}
         except Exception:
             src_cols = {c.lower() for c in d.columns}
         for m in re.finditer(
-            r"(?<![\w.`'\"])([A-Za-z_]\w*)\b(?!\s*[(.])", _blank_quoted(expr)
+            r"(?<![\w.`'\"])([A-Za-z_]\w*)\b(?!\s*[(.])", sqltext.blank_quoted(expr)
         ):
             if m.group(1).lower() in src_cols:
                 raise ValueError(
@@ -2649,25 +2599,23 @@ class DdlCatalog:
         if len(d.key_cols) == 1:
             exprs = [key_arg]
         else:
-            from binance_etl_clickhouse_spark import dialect as _d
-
             inner = key_arg.strip()
             m = re.fullmatch(r"tuple\s*\((.*)\)", inner, re.I | re.S)
             ns = re.fullmatch(
                 r"named_struct\s*\((.*)\)", inner, re.I | re.S
             )
             if m is not None:
-                exprs = _d._split_args(m.group(1))
+                exprs = sqltext.split_top_level(m.group(1))
             elif ns is not None:
                 # the scalar dialect rewrites tuple(a, b) to
                 # named_struct('col1', a, 'col2', b) before this layer
                 # sees it: the VALUES are the even-position args
-                parts = _d._split_args(ns.group(1))
+                parts = sqltext.split_top_level(ns.group(1))
                 exprs = parts[1::2]
             else:
                 if inner.startswith("(") and inner.endswith(")"):
                     inner = inner[1:-1]
-                exprs = _d._split_args(inner)
+                exprs = sqltext.split_top_level(inner)
             if len(exprs) != len(d.key_cols):
                 raise ValueError(
                     f"dictionary {d.name} has a {len(d.key_cols)}-part key "
@@ -2760,10 +2708,7 @@ class DdlCatalog:
         pattern = re.compile(
             r"(?<![\w.`])(" + "|".join(map(re.escape, self.databases)) + r")\.(?=\w)"
         )
-        parts = re.split(r"('(?:[^']|'')*')", query)  # keep quoted literals
-        return "".join(
-            p if i % 2 else pattern.sub("", p) for i, p in enumerate(parts)
-        )
+        return sqltext.sub_unquoted(pattern, "", query)  # literals kept
 
     # -- system.* introspection tables (r10) -------------------------------
 
@@ -2784,9 +2729,7 @@ class DdlCatalog:
         (Spark temp views can't carry a db qualifier). Only the referenced
         system tables are built — a query that never touches system.* pays
         nothing."""
-        from binance_etl_clickhouse_spark.dialect import _blank_quoted
-
-        blanked = _blank_quoted(query)
+        blanked = sqltext.blank_quoted(query)
         refs = {
             m.group(1).lower()
             for m in re.finditer(r"(?<![\w.`])system\.(\w+)", blanked, re.I)
@@ -2794,7 +2737,7 @@ class DdlCatalog:
         hit = refs & set(self._SYSTEM_TABLES)
         # Only a system.* reference in TABLE POSITION (after FROM/JOIN) is
         # ours to serve; an unknown name anywhere else (a string the
-        # _blank_quoted pass missed, an identifier that merely looks
+        # quote blanking missed, an identifier that merely looks
         # qualified) passes through to fail — or work — downstream
         # (r10 ADVICE item 3).
         table_pos = {
@@ -2815,7 +2758,6 @@ class DdlCatalog:
             getattr(self, f"_system_{name}")().createOrReplaceTempView(
                 f"__system_{name}"
             )
-        parts = re.split(r"('(?:[^']|'')*')", query)
         pat = re.compile(r"(?<![\w.`])system\.(\w+)", re.I)
 
         def _sub(m: re.Match) -> str:
@@ -2823,9 +2765,7 @@ class DdlCatalog:
             # unknown names outside table position pass through verbatim
             return f"__system_{nm}" if nm in hit else m.group(0)
 
-        return "".join(
-            p if i % 2 else pat.sub(_sub, p) for i, p in enumerate(parts)
-        )
+        return sqltext.sub_unquoted(pat, _sub, query)
 
     def _system_one(self) -> DataFrame:
         """``system.one``: exactly one row, one UInt8 column ``dummy`` = 0 —

@@ -369,9 +369,13 @@ class AnalyticsEngine:
         reference-flavored SQL runs verbatim.
         """
         if dialect == "clickhouse":
+            from binance_etl_clickhouse_spark import sqltext
             from binance_etl_clickhouse_spark.dialect import translate_clickhouse_sql
             from binance_etl_clickhouse_spark.dialect_ddl import is_clickhouse_ddl
 
+            # comments out once, before any statement-shape regex below
+            # reads the text: a leading `-- note` line would hide a CREATE
+            query = sqltext.strip_comments(query)
             if is_clickhouse_ddl(query):
                 # CREATE DATABASE/TABLE: provision instead of querying —
                 # the reference's seven DDL strings run verbatim

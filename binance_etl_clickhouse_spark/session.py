@@ -62,11 +62,19 @@ _BASE_CONFS: dict[str, str] = {
     "spark.sql.codegen.useIdInClassName": "false",
 }
 
-#: local[*] puts driver AND all executor threads in ONE JVM, whose default
-#: heap is 1g — 32 concurrent tasks in 1g OOMs on any shuffle-heavy query
-#: long before the machine (128 GiB here) is remotely loaded. On a real
-#: cluster this maps to spark.executor.memory sized per executor instead.
-_DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for ``get_spark``: SPARK_GRAFT_DRIVER_MEM
+    when set, else 16g or half the physical RAM, whichever is smaller.
+
+    local[*] puts driver AND all executor threads in ONE JVM, whose default
+    heap is 1g — 32 concurrent tasks in 1g OOMs on any shuffle-heavy query
+    long before a large machine is remotely loaded. The RAM cap keeps a
+    runaway plan failing inside the JVM: a heap as large as the machine
+    lets it grow until the kernel's OOM killer ends the whole process. On a
+    real cluster this maps to spark.executor.memory sized per executor."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(16 * 1024, ram_mb // 2)}m")
 
 
 def default_parallelism() -> int:
@@ -90,7 +98,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores}]")
-        .config("spark.driver.memory", _DEFAULT_DRIVER_MEM)
+        .config("spark.driver.memory", default_driver_memory())
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions if shuffle_partitions is not None else cores),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 INTERVAL_MS = {"1m": 60_000, "5m": 300_000, "1h": 3_600_000, "1d": 86_400_000}
 
-_QUOTES = ["USDT", "USDC", "BTC", "ETH"]
+_QUOTE_ASSETS = ["USDT", "USDC", "BTC", "ETH"]
 
 
 def _symbol_name(i: F.Column) -> F.Column:
@@ -29,7 +29,7 @@ def _symbol_name(i: F.Column) -> F.Column:
 def synthetic_spot_symbols(spark: SparkSession, n: int = 20) -> DataFrame:
     """Spot symbol dimension ≙ get_spot_symbols() (reference :110-147)."""
     r = spark.range(n).withColumnRenamed("id", "i")
-    quote = F.element_at(F.array(*[F.lit(q) for q in _QUOTES]), (F.col("i") % 4 + 1).cast("int"))
+    quote = F.element_at(F.array(*[F.lit(q) for q in _QUOTE_ASSETS]), (F.col("i") % 4 + 1).cast("int"))
     return r.select(
         _symbol_name(F.col("i")).alias("symbol"),
         F.concat(F.lit("BASE"), F.col("i").cast("string")).alias("base_asset"),

@@ -17,6 +17,7 @@ regressions at the cheapest possible point.
 
 from __future__ import annotations
 
+import os
 import re
 from pathlib import Path
 
@@ -113,3 +114,32 @@ def test_no_rdd_usage_outside_partition_guard():
             if ".rdd" in line and "getNumPartitions" not in line:
                 offenders.append(f"{path.relative_to(PKG)}:{lineno}: {line.strip()}")
     assert not offenders, "RDD usage found:\n" + "\n".join(offenders)
+
+
+def test_sql_text_is_lexed_only_in_sqltext():
+    """One lexical contract for SQL text: quotes, escapes, comments and
+    bracket depth are read by ``sqltext`` alone. Anywhere else, testing a
+    character against the quote set or carrying a private quote skipper
+    means a second scanner that can drift from the first (two did: one
+    ignored backslash escapes, one never saw comments)."""
+    pattern = re.compile(r"""\bin _QUOTES\b|in "'\\"`"|_skip_string""")
+    offenders = []
+    for path in _py_files():
+        if path.name == "sqltext.py":
+            continue
+        for lineno, line in _code_lines(path):
+            if pattern.search(line):
+                offenders.append(f"{path.relative_to(PKG)}:{lineno}: {line.strip()}")
+    assert not offenders, "SQL scanning outside sqltext:\n" + "\n".join(offenders)
+
+
+def test_default_driver_memory_fits_the_machine(monkeypatch):
+    from binance_etl_clickhouse_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mem = default_driver_memory()
+    assert mem.endswith("m")
+    assert int(mem[:-1]) <= min(16 * 1024, ram_mb // 2)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"

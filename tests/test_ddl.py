@@ -3107,3 +3107,46 @@ class TestAggregatingMergeTree:
                 "ALTER TABLE agg_daily DROP COLUMN users",
                 dialect="clickhouse",
             )
+
+
+# -- lexical contract on the DDL path: one lexer (sqltext) for quotes and
+# comments, shared with the query dialect --------------------------------
+
+
+def test_backslash_escaped_quote_in_default_parses():
+    from binance_etl_clickhouse_spark.dialect_ddl import parse_clickhouse_ddl
+
+    ddl = parse_clickhouse_ddl(
+        r"CREATE TABLE t (a String DEFAULT 'it\'s, ok', b Int8) "
+        "ENGINE = MergeTree ORDER BY b"
+    )
+    assert ddl.columns == [
+        ("a", "string", r"'it\'s, ok'"),
+        ("b", "tinyint", None),
+    ]
+
+
+def test_comments_in_ddl_provision_the_same_table(spark, tmp_path):
+    plain = (
+        "CREATE TABLE {name} (sym String, note String DEFAULT '--kept', "
+        "ts DateTime) ENGINE = ReplacingMergeTree ORDER BY (sym, ts)"
+    )
+    commented = {
+        "lead": "-- provisioned by the nightly job\n" + plain,
+        "block": plain.replace("(sym String,", "(sym String, /* key, (part) */"),
+        "inline": plain.replace(
+            "note String", "-- a comma, and a paren (\n note String"
+        ),
+    }
+    eng = AnalyticsEngine(spark, verbose=False, ddl_root=str(tmp_path / "ddl"))
+    eng.sql(plain.format(name="t_plain"), dialect="clickhouse")
+    want = eng.ddl_catalog.tables["t_plain"].ddl
+    assert ("note", "string", "'--kept'") in want.columns
+    for label, text in commented.items():
+        eng.sql(text.format(name=f"t_{label}"), dialect="clickhouse")
+        got = eng.ddl_catalog.tables[f"t_{label}"].ddl
+        assert (got.columns, got.order_by, got.engine) == (
+            want.columns,
+            want.order_by,
+            want.engine,
+        ), label
