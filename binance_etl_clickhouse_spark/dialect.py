@@ -2562,11 +2562,9 @@ def translate_clickhouse_sql(sql: str) -> str:
     # a[i] is 0-based and returned the WRONG element silently). The output
     # is bracket-free, so every scanner below sees plain calls.
     sql = _rewrite_brackets(sql)
-    # FROM-position FINAL strip (regex pre-pass: the pattern is anchored on
-    # the FROM keyword, so the only false positive would be the literal text
-    # "FROM x FINAL" inside a string — not worth a second scanner)
-    sql = _FINAL_RE.sub(r"\1", sql)
-    sql = _SAMPLE_RE.sub(_sample_sub, sql)
+    # FROM-position FINAL strip and SAMPLE rewrite, never inside a literal
+    sql = sqltext.sub_unquoted(_FINAL_RE, r"\1", sql)
+    sql = sqltext.sub_unquoted(_SAMPLE_RE, _sample_sub, sql)
     # PREWHERE p WHERE w -> WHERE (p) AND (w): must run before the bare
     # keyword map turns PREWHERE into a second WHERE (invalid SQL). After
     # the FINAL/SAMPLE strips so `FROM t FINAL PREWHERE p WHERE w` merges.
@@ -2575,8 +2573,7 @@ def translate_clickhouse_sql(sql: str) -> str:
     # so SETTINGS is only end-anchored once FORMAT is gone
     sql = _TRAILING_FORMAT_RE.sub(r"\1", sql)
     sql = _TRAILING_SETTINGS_RE.sub(r"\1", sql)
-    # matched outside quotes: unlike the FINAL regex, these hint words
-    # plausibly appear in stored query text
+    # hint words, matched outside quotes like FINAL and SAMPLE
     sql = sqltext.sub_unquoted(_GLOBAL_HINT_RE, "", sql)
     sql = sqltext.sub_unquoted(_ALL_STRICTNESS_RE, "", sql)
     sql = _rewrite_asof_join(sql)

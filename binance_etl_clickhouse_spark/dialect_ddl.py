@@ -1281,7 +1281,7 @@ class DdlCatalog:
             # (DROP TABLE on a materialized view is valid ClickHouse.)
             if mv.owns_storage:
                 entry = self.tables.pop(bare)
-                self._rm_data(entry)
+                entry.table.drop()
             self.spark.catalog.dropTempView(bare)
             return self.spark.createDataFrame([], T.StructType([]))
         if bare in self.plain_views:
@@ -1301,7 +1301,7 @@ class DdlCatalog:
             if not m.group(2):
                 raise KeyError(f"unknown table {m.group(3)!r}")
         else:
-            self._rm_data(entry)
+            entry.table.drop()
             self.spark.catalog.dropTempView(bare)
         return self.spark.createDataFrame([], T.StructType([]))
 
@@ -1318,7 +1318,7 @@ class DdlCatalog:
             if not m.group(1):
                 raise KeyError(f"unknown table {m.group(2)!r}")
             return self.spark.createDataFrame([], T.StructType([]))
-        self._rm_data(entry)
+        entry.table.drop()
         self._clear_reshape(entry)  # no bytes left to disagree
         self._refresh_view(entry)
         return self.spark.createDataFrame([], T.StructType([]))
@@ -1794,17 +1794,6 @@ class DdlCatalog:
                     f"cannot {action} {name!r}: it backs materialized "
                     f"view {vname!r} — drop the view first"
                 )
-
-    def _rm_data(self, entry: CatalogEntry) -> None:
-        import shutil
-
-        p = entry.table.path
-        for d in (p, p.rstrip("/") + ".versions", p.rstrip("/") + ".compact.bak",
-                  p.rstrip("/") + ".compact.tmp"):
-            if os.path.islink(d):
-                os.remove(d)
-            else:
-                shutil.rmtree(d, ignore_errors=True)
 
     # -- DML --------------------------------------------------------------
 

@@ -132,10 +132,14 @@ def blank_quoted(sql: str) -> str:
 
 def sub_unquoted(pattern: re.Pattern, repl, sql: str) -> str:
     """``pattern.sub(repl, sql)`` matching only outside quoted tokens
-    (matches are found on :func:`blank_quoted` text; ``repl`` is a string
-    or a match -> string function, as for ``re.sub``)."""
+    (matches are found on :func:`blank_quoted` text, and one that spans a
+    blanked token is left as it is; ``repl`` is a string or a match ->
+    string function, as for ``re.sub``)."""
+    blank = blank_quoted(sql)
     out, last = [], 0
-    for m in pattern.finditer(blank_quoted(sql)):
+    for m in pattern.finditer(blank):
+        if blank[m.start() : m.end()] != sql[m.start() : m.end()]:
+            continue
         out += (sql[last : m.start()], repl(m) if callable(repl) else m.expand(repl))
         last = m.end()
     out.append(sql[last:])

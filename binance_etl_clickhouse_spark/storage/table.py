@@ -19,6 +19,7 @@ reads skip the window entirely.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,30 @@ from binance_etl_clickhouse_spark.schemas import MONTH_COL
 
 INGEST_SEQ = "ingest_seq"
 SEQ_SIDECAR = "_seq.json"  # leading "_" -> invisible to Spark's parquet reader
+#: siblings of a table's path: a whole-table rewrite's staging dir, the
+#: live dir parked during its swap, a versioned table's snapshot store and
+#: the symlink staged for its commit rename
+_SWAP_TMP, _SWAP_BAK, _VERSIONS, _LINK_TMP = (
+    ".compact.tmp", ".compact.bak", ".versions", ".lnk.tmp"
+)
+
+
+def _remove(p: str) -> None:
+    """Delete the tree at ``p``, or only the link when ``p`` is a symlink
+    (a versioned table's pointer: ``rmtree`` refuses links). A missing
+    ``p`` is a no-op."""
+    if os.path.islink(p):
+        os.remove(p)
+    else:
+        shutil.rmtree(p, ignore_errors=True)
+
+
+def drop_storage(path: str) -> None:
+    """Remove a table's data dir, its version store (or crash recovery would
+    resurrect a parked snapshot of a deliberately dropped table) and any
+    swap debris."""
+    for suffix in ("", _VERSIONS, _SWAP_BAK, _SWAP_TMP, _LINK_TMP):
+        _remove(path.rstrip("/") + suffix)
 
 
 def expire_month_partitions(path: str, before_month: int) -> list[int]:
@@ -42,8 +67,6 @@ def expire_month_partitions(path: str, before_month: int) -> list[int]:
     schema"), whereas a missing table is the state every caller already
     gates on with ``exists()`` — and the next append/refresh recreates it
     from scratch. Returns dropped months, oldest first."""
-    import shutil
-
     dropped: list[int] = []
     if not os.path.isdir(path):
         return dropped
@@ -63,16 +86,7 @@ def expire_month_partitions(path: str, before_month: int) -> list[int]:
         else:
             remaining += 1
     if dropped and remaining == 0:
-        if os.path.islink(path):
-            # versioned table: drop the pointer, the current snapshot dir,
-            # and the whole version store (or crash recovery would
-            # resurrect a parked snapshot of a deliberately-dropped table)
-            real = os.path.realpath(path)
-            os.remove(path)
-            shutil.rmtree(real, ignore_errors=True)
-            shutil.rmtree(path.rstrip("/") + ".versions", ignore_errors=True)
-        else:
-            shutil.rmtree(path)
+        drop_storage(path)
     return dropped
 
 
@@ -103,20 +117,21 @@ class ServingTable:
 
     # -- crash recovery ---------------------------------------------------
 
+    def _sibling(self, suffix: str) -> str:
+        return self.path.rstrip("/") + suffix
+
     def _recover(self) -> None:
-        """Heal an interrupted :meth:`compact` swap.
+        """Heal an interrupted whole-table swap (:meth:`_commit`).
 
         The swap is live -> .bak, tmp -> live, rm .bak. A crash between the
         two moves leaves the live path missing with a complete .bak (and
         possibly a complete tmp). Recovery restores the .bak — the
-        pre-compact state, which is always safe because compact() only
-        rewrites existing data. Leftover tmp/bak dirs from completed swaps
-        are cleared.
+        pre-rewrite state, which is always safe because a rewrite only
+        replaces existing data. Leftover tmp/bak debris from completed swaps
+        is cleared; a symlinked .bak (a versioned table's pointer) loses
+        only the link, its snapshot stays in the version store.
         """
-        import shutil
-
-        bak = self.path.rstrip("/") + ".compact.bak"
-        tmp = self.path.rstrip("/") + ".compact.tmp"
+        bak, tmp = self._sibling(_SWAP_BAK), self._sibling(_SWAP_TMP)
         if not os.path.isdir(self.path) and os.path.isdir(bak):
             shutil.move(bak, self.path)
         # versioned-swap conversion crash: live dir moved into the version
@@ -132,13 +147,12 @@ class ServingTable:
         if os.path.isdir(self.path):
             # live dir resolves -> any leftover swap debris is stale
             for d in (bak, tmp):
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
+                _remove(d)
 
     # -- versioned layout (atomic compact swap) ---------------------------
 
     def _versions_root(self) -> str:
-        return self.path.rstrip("/") + ".versions"
+        return self._sibling(_VERSIONS)
 
     def resolved_path(self) -> str:
         """Physical data dir with the version symlink resolved. DataFrames
@@ -151,8 +165,6 @@ class ServingTable:
         """Drop version dirs no longer referenced by the live symlink,
         keeping the ``keep`` most recent unreferenced ones as a grace window
         for in-flight readers. Returns removed dir names."""
-        import shutil
-
         vroot = self._versions_root()
         if not os.path.isdir(vroot):
             return []
@@ -166,6 +178,11 @@ class ServingTable:
         for d in doomed:
             shutil.rmtree(os.path.join(vroot, d), ignore_errors=True)
         return doomed
+
+    def drop(self) -> None:
+        """Remove the table's storage (DROP / TRUNCATE): data, version
+        store and swap debris."""
+        drop_storage(self.path)
 
     # -- version sequencing -----------------------------------------------
 
@@ -520,6 +537,99 @@ class ServingTable:
                 out.append(month)
         return out
 
+    def _commit(
+        self,
+        w: DataFrame,
+        months: list[int] | None = None,
+        versioned: bool | None = None,
+        collapsed: bool = False,
+    ) -> None:
+        """The one copy-on-write commit behind compaction, DELETE and UPDATE:
+        the stored rows become the arranged frame ``w``.
+
+        ``months=None`` replaces the whole table. ``w`` lands in a fresh
+        dir: a new ``<path>.versions/vNNN`` behind one atomic symlink
+        rename when the table is versioned (``versioned=None`` keeps the
+        table's layout), else ``<path>.compact.tmp`` swapped in through
+        ``.compact.bak``. With ``months``, only those month partitions are
+        rewritten, in place, by a dynamic partition overwrite — every other
+        month's files stay untouched bytes — and a listed month that ``w``
+        holds no rows for is removed (dynamic overwrite cannot replace a
+        partition with nothing).
+
+        A rewrite keeps every row's version stamp, so the seq sidecar
+        carries over; ``collapsed=True`` records that the table now holds
+        one version per key, else the compacted flag carries over (no
+        rewrite adds versions). A zone map is rebuilt over the new files if
+        one existed.
+        """
+        from binance_etl_clickhouse_spark import checkpoints
+        from binance_etl_clickhouse_spark.storage import zonemap as _zm
+
+        seq, compacted = self._read_sidecar(), self._read_compacted_seq()
+        prior_zm = _zm.read_zonemap(self.path)
+        if months is None:
+            if versioned is None:
+                versioned = os.path.islink(self.path)
+            if versioned:
+                vroot = self._versions_root()
+                os.makedirs(vroot, exist_ok=True)
+                nums = [
+                    int(d[1:])
+                    for d in os.listdir(vroot)
+                    if d.startswith("v") and d[1:].isdigit()
+                ]
+                target = os.path.join(vroot, f"v{max(nums, default=0) + 1:09d}")
+            else:
+                target = self._sibling(_SWAP_TMP)
+            writer = w.write.mode("overwrite")
+            (writer.partitionBy(MONTH_COL) if self.time_col else writer).parquet(target)
+            if versioned:
+                if not os.path.islink(self.path):
+                    # one-time conversion: park the live dir in the version
+                    # store (it stays readable for in-flight readers and is
+                    # the recovery source if the crash lands before the link)
+                    shutil.move(
+                        self.path,
+                        os.path.join(vroot, f"legacy-{os.path.basename(target)}"),
+                    )
+                link = self._sibling(_LINK_TMP)
+                _remove(link)
+                os.symlink(target, link)
+                os.replace(link, self.path)  # THE commit: one atomic rename
+            else:
+                # single-FS rename swap; the versioned layout is the fully
+                # atomic form
+                bak = self._sibling(_SWAP_BAK)
+                shutil.move(self.path, bak)
+                shutil.move(target, self.path)
+                _remove(bak)
+        else:
+            month_dirs = [os.path.join(self.path, f"{MONTH_COL}={m}") for m in months]
+            before = {d: set(os.listdir(d)) for d in month_dirs if os.path.isdir(d)}
+            # materialize and CUT LINEAGE before overwriting the dirs the
+            # plan reads from (Spark rejects self-overwrite, and lazily
+            # re-reading a half-rewritten dir would be worse)
+            w = w.localCheckpoint(eager=True)
+            try:
+                (
+                    w.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy(MONTH_COL)
+                    .parquet(self.path)
+                )
+            finally:
+                checkpoints.release(w)
+            # file names are unique per write: a month still holding an old
+            # file was not overwritten, so ``w`` had no rows for it
+            for d, names in before.items():
+                if names & set(os.listdir(d)):
+                    shutil.rmtree(d)
+        if seq is not None:
+            self._write_sidecar(seq, compacted_seq=seq if collapsed else compacted)
+        if prior_zm is not None:
+            _zm.build_zonemap(self.path, prior_zm["columns"])
+
     def compact_months(
         self,
         spark: SparkSession,
@@ -537,8 +647,6 @@ class ServingTable:
         a key lives in one month dir, so per-month keep-last equals global
         keep-last. Asserted, not assumed.
         """
-        from binance_etl_clickhouse_spark.storage import zonemap as _zm
-
         if self.time_col is None or self.time_col not in self.keys:
             raise ValueError(
                 "per-month compaction requires time_col to be part of the "
@@ -546,26 +654,23 @@ class ServingTable:
             )
         if not months:
             return
-        self._recover()
-        prior_zm = _zm.read_zonemap(self.path)
-        cur_seq = self._read_sidecar()
-        snap = self.read(spark).filter(F.col(MONTH_COL).isin([int(m) for m in months]))
-        # materialize and CUT LINEAGE before overwriting the path the plan
-        # reads from (Spark rejects self-overwrite, and lazily re-reading a
-        # half-rewritten dir would be worse); bounded by the selected months
-        w = self._arrange(snap, zorder).localCheckpoint(eager=True)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            w.write.mode("overwrite").partitionBy(MONTH_COL).parquet(self.path)
-        finally:
-            w.unpersist()
-            if prev_mode is not None:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        if cur_seq is not None:
-            self._write_sidecar(cur_seq)
-        if prior_zm is not None:
-            _zm.build_zonemap(self.path, prior_zm["columns"])
+        months = [int(m) for m in months]
+        snap = self.read(spark).filter(F.col(MONTH_COL).isin(months))
+        self._commit(self._arrange(snap, zorder), months)
+
+    def _matches(self, spark: SparkSession, hit) -> tuple[list[int] | None, int, DataFrame]:
+        """Where a row-level mutation lands: the months holding a row where
+        ``hit`` is TRUE (``None`` for an unpartitioned table, which
+        rewrites whole), the number of such rows, and the raw rows of the
+        rewrite's scope. Superseded versions are rows too: a mutation runs
+        on the RAW frame, so a later ``read`` can never resurrect them."""
+        raw = self.read_raw(spark)
+        if self.time_col is None:
+            return None, raw.filter(hit).count(), raw
+        per_month = raw.filter(hit).groupBy(MONTH_COL).count().collect()
+        months = [int(r[0]) for r in per_month]
+        n = int(sum(r["count"] for r in per_month))
+        return months, n, raw.filter(F.col(MONTH_COL).isin(months))
 
     def delete_where(self, spark: SparkSession, predicate) -> int:
         """Row-level delete: remove every version of every row where
@@ -577,74 +682,15 @@ class ServingTable:
         (dynamic partition overwrite, like :meth:`compact_months`); every
         other month's files are untouched bytes. Rows where the predicate
         is NULL are kept (SQL DELETE semantics). A month whose every row
-        matches is dropped as a directory — dynamic overwrite cannot
-        replace a partition with nothing. Deletes run on the RAW frame, so
-        superseded versions of a matching key are purged too (a later
-        ``read`` can never resurrect them). Returns rows deleted.
+        matches is dropped as a directory. Returns rows deleted.
         """
-        import shutil
-
-        from binance_etl_clickhouse_spark.storage import zonemap as _zm
-
-        self._recover()
         if not self.exists():
             return 0
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        raw = self.read_raw(spark)
-        if self.time_col is None:
-            # unpartitioned table: whole-table copy-on-write via the
-            # compact tmp-swap (there is no partition unit to prune to)
-            keep = raw.filter(~F.coalesce(pred, F.lit(False)))
-            n_del = raw.count() - keep.count()
-            if n_del == 0:
-                return 0
-            cur_seq = self._read_sidecar()
-            tmp = self.path.rstrip("/") + ".compact.tmp"
-            self._arrange(keep, None).write.mode("overwrite").parquet(tmp)
-            bak = self.path.rstrip("/") + ".compact.bak"
-            shutil.move(self.path, bak)
-            shutil.move(tmp, self.path)
-            shutil.rmtree(bak)
-            if cur_seq is not None:
-                self._write_sidecar(cur_seq)
-            return int(n_del)
-        per_month = (
-            raw.filter(pred).groupBy(MONTH_COL).count().collect()
-        )
-        if not per_month:
-            return 0
-        months = [int(r[0]) for r in per_month]
-        n_del = int(sum(r["count"] for r in per_month))
-        cur_seq = self._read_sidecar()
-        compacted = self._read_compacted_seq()
-        prior_zm = _zm.read_zonemap(self.path)
-        keep = raw.filter(F.col(MONTH_COL).isin(months)).filter(
-            ~F.coalesce(pred, F.lit(False))
-        )
-        # cut lineage before overwriting the dirs the plan reads from
-        w = self._arrange(keep, None).localCheckpoint(eager=True)
-        kept_months = {int(r[0]) for r in w.select(MONTH_COL).distinct().collect()}
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            if kept_months:
-                w.write.mode("overwrite").partitionBy(MONTH_COL).parquet(self.path)
-        finally:
-            w.unpersist()
-            if prev_mode is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-        base = self.resolved_path()
-        for m in months:
-            if m not in kept_months:
-                shutil.rmtree(os.path.join(base, f"{MONTH_COL}={m}"), ignore_errors=True)
-        if cur_seq is not None:
-            # deleting never ADDS versions: a compacted table stays
-            # one-version-per-key, so the flag carries over
-            self._write_sidecar(cur_seq, compacted_seq=compacted)
-        if prior_zm is not None:
-            _zm.build_zonemap(self.path, prior_zm["columns"])
+        hit = F.coalesce(pred, F.lit(False))
+        months, n_del, scope = self._matches(spark, hit)
+        if n_del:
+            self._commit(self._arrange(scope.filter(~hit), None), months)
         return n_del
 
     def update_where(
@@ -658,8 +704,6 @@ class ServingTable:
         dedup identity/partition — that operation is a delete + append).
         Returns rows updated.
         """
-        from binance_etl_clickhouse_spark.storage import zonemap as _zm
-
         forbidden = set(self.keys) | {self.time_col, MONTH_COL, INGEST_SEQ}
         bad = sorted(set(assignments) & forbidden)
         if bad:
@@ -667,7 +711,6 @@ class ServingTable:
                 f"cannot UPDATE key/partition/version columns {bad}; "
                 "delete + append instead"
             )
-        self._recover()
         if not self.exists():
             return 0
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -675,56 +718,17 @@ class ServingTable:
             c: (F.expr(v) if isinstance(v, str) else v)
             for c, v in assignments.items()
         }
-        raw = self.read_raw(spark)
         hit = F.coalesce(pred, F.lit(False))
-        if self.time_col is None:
-            months = None
-            scope = raw
-        else:
-            per_month = raw.filter(hit).groupBy(MONTH_COL).count().collect()
-            if not per_month:
-                return 0
-            months = [int(r[0]) for r in per_month]
-            scope = raw.filter(F.col(MONTH_COL).isin(months))
-        n_upd = scope.filter(hit).count()
-        if n_upd == 0:
-            return 0
-        updated = scope.select(
-            *[
-                (F.when(hit, sets[c]).otherwise(F.col(c)).alias(c) if c in sets else c)
-                for c in scope.columns
-            ]
-        )
-        cur_seq = self._read_sidecar()
-        compacted = self._read_compacted_seq()
-        prior_zm = _zm.read_zonemap(self.path)
-        w = self._arrange(updated, None).localCheckpoint(eager=True)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            if months is None:
-                import shutil
-
-                tmp = self.path.rstrip("/") + ".compact.tmp"
-                w.write.mode("overwrite").parquet(tmp)
-                bak = self.path.rstrip("/") + ".compact.bak"
-                shutil.move(self.path, bak)
-                shutil.move(tmp, self.path)
-                shutil.rmtree(bak)
-            else:
-                w.write.mode("overwrite").partitionBy(MONTH_COL).parquet(self.path)
-        finally:
-            w.unpersist()
-            if prev_mode is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
-        if cur_seq is not None:
-            # updates neither add nor remove versions
-            self._write_sidecar(cur_seq, compacted_seq=compacted)
-        if prior_zm is not None:
-            _zm.build_zonemap(self.path, prior_zm["columns"])
-        return int(n_upd)
+        months, n_upd, scope = self._matches(spark, hit)
+        if n_upd:
+            updated = scope.select(
+                *[
+                    (F.when(hit, sets[c]).otherwise(F.col(c)).alias(c) if c in sets else c)
+                    for c in scope.columns
+                ]
+            )
+            self._commit(self._arrange(updated, None), months)
+        return n_upd
 
     def compact(
         self,
@@ -767,13 +771,6 @@ class ServingTable:
         ``None`` keeps whichever layout the table already uses (a symlinked
         table stays versioned forever).
         """
-        from binance_etl_clickhouse_spark.storage import zonemap as _zm
-
-        self._recover()
-        if versioned is None:
-            versioned = os.path.islink(self.path)
-        cur_seq = self._read_sidecar()
-        prior_zm = _zm.read_zonemap(self.path)
         if not dedup:
             snap = self.read_raw(spark)  # merge + re-sort, keep every row
         elif dedup_order is not None:
@@ -803,59 +800,10 @@ class ServingTable:
                 .filter(F.col("__dd_rn") == 1)
                 .drop("__dd_rn")
             )
-        import shutil
-
-        if versioned:
-            vroot = self._versions_root()
-            os.makedirs(vroot, exist_ok=True)
-            nums = [
-                int(d[1:])
-                for d in os.listdir(vroot)
-                if d.startswith("v") and d[1:].isdigit()
-            ]
-            vdir = os.path.join(vroot, f"v{max(nums, default=0) + 1:09d}")
-            w = self._arrange(snap, zorder)
-            if self.time_col is not None:
-                w.write.mode("overwrite").partitionBy(MONTH_COL).parquet(vdir)
-            else:
-                w.write.mode("overwrite").parquet(vdir)
-            if not os.path.islink(self.path):
-                # one-time conversion: park the live dir in the version store
-                # (it stays readable for in-flight readers and is the
-                # recovery source if the crash lands before the symlink)
-                shutil.move(
-                    self.path, os.path.join(vroot, f"legacy-{os.path.basename(vdir)}")
-                )
-            tmp_link = self.path.rstrip("/") + ".lnk.tmp"
-            if os.path.lexists(tmp_link):
-                os.remove(tmp_link)
-            os.symlink(vdir, tmp_link)
-            os.replace(tmp_link, self.path)  # THE commit: one atomic rename
-        else:
-            tmp = self.path.rstrip("/") + ".compact.tmp"
-            w = self._arrange(snap, zorder)
-            if self.time_col is not None:
-                w.write.mode("overwrite").partitionBy(MONTH_COL).parquet(tmp)
-            else:
-                w.write.mode("overwrite").parquet(tmp)
-            # atomic-ish swap (single-FS rename; the versioned layout above is
-            # the fully atomic form)
-            bak = self.path.rstrip("/") + ".compact.bak"
-            shutil.move(self.path, bak)
-            shutil.move(tmp, self.path)
-            shutil.rmtree(bak)
-        # compaction preserves versions (it keeps max-per-key), so the
-        # sidecar's max carries over unchanged; the compacted flag lets
-        # read() skip the dedup window until the next append — only valid
-        # when this rewrite actually collapsed to one row per key
-        if cur_seq is not None:
-            self._write_sidecar(
-                cur_seq, compacted_seq=cur_seq if dedup else None
-            )
-        # every file was rewritten -> the sparse index rebuilds over the new
-        # layout (same columns); one footer pass over the compacted files
-        if prior_zm is not None:
-            _zm.build_zonemap(self.path, prior_zm["columns"])
+        # every file is rewritten, so a zone map rebuilds over the new layout;
+        # read() may skip the dedup window until the next append only when
+        # this rewrite collapsed to one row per key
+        self._commit(self._arrange(snap, zorder), versioned=versioned, collapsed=dedup)
 
     def stats_max(self, col: str):
         """Driver-side footer-stats maximum of ``col`` — ZERO Spark jobs.

@@ -69,6 +69,8 @@ def compact_sidecar_index(
     import os
     import shutil
 
+    from binance_etl_clickhouse_spark.checkpoints import release as release_ckpt
+
     recover_sidecar_index(index_dir)
     if not os.path.isdir(index_dir):
         return {"files_before": 0, "files_after": 0, "rows": 0}
@@ -93,7 +95,7 @@ def compact_sidecar_index(
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(bak, ignore_errors=True)
     out.coalesce(tgt).write.mode("overwrite").parquet(tmp)
-    out.unpersist()
+    release_ckpt(out)
     os.rename(index_dir, bak)
     os.rename(tmp, index_dir)
     shutil.rmtree(bak)

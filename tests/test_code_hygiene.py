@@ -133,6 +133,19 @@ def test_sql_text_is_lexed_only_in_sqltext():
     assert not offenders, "SQL scanning outside sqltext:\n" + "\n".join(offenders)
 
 
+def test_overwrite_mode_is_passed_per_write():
+    """Dynamic partition overwrite is a per-write option. Set on the
+    session conf it outlives the write (a save/restore skips the restore
+    when the conf was never set), and every later ``partitionBy``
+    overwrite in the session then keeps partitions it should replace."""
+    offenders = []
+    for path in _py_files():
+        for lineno, line in _code_lines(path):
+            if "sources.partitionOverwriteMode" in line:
+                offenders.append(f"{path.relative_to(PKG)}:{lineno}: {line.strip()}")
+    assert not offenders, "session-level overwrite mode:\n" + "\n".join(offenders)
+
+
 def test_default_driver_memory_fits_the_machine(monkeypatch):
     from binance_etl_clickhouse_spark.session import default_driver_memory
 

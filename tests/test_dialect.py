@@ -210,6 +210,9 @@ def test_final_prewhere_arrayjoin_rewrites():
     assert t("SELECT arrayJoin(xs) FROM t") == "SELECT explode(xs) FROM t"
     # a column actually NAMED final (not in FROM position) is untouched
     assert t("SELECT final FROM t") == "SELECT final FROM t"
+    # "FROM x FINAL" inside a string literal is text, not the keyword
+    lit = "SELECT * FROM t WHERE note = 'read FROM x FINAL please'"
+    assert t(lit) == lit
     # idempotent
     q = t("SELECT arrayJoin(xs) AS x FROM bn_klines FINAL PREWHERE y = 1")
     assert t(q) == q
@@ -357,6 +360,9 @@ def test_sample_clause_rewrites(spark):
     assert t(q) == q
     # a column named sample is untouched (pattern anchors on FROM)
     assert t("SELECT sample FROM t") == "SELECT sample FROM t"
+    # ... and so is a SAMPLE clause spelled inside a string literal
+    lit = "SELECT * FROM t WHERE note = 'FROM x SAMPLE 0.5'"
+    assert t(lit) == lit
     # executes: sampled row count is bounded by the source
     from binance_etl_clickhouse_spark.tables import register_views
 

@@ -9,6 +9,8 @@ quoted tokens with both escape styles:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -116,6 +118,9 @@ def test_escape_styles_and_unterminated_spans():
     ]
     assert sqltext.strip_comments("a -- x, 'y\nb /* open") == "a  \nb  "
     assert sqltext.blank_quoted("f('a,b', c)") == "f(     , c)"
+    # a match that would swallow a quoted token is not outside quotes
+    ab = re.compile(r"a\s+b")
+    assert sqltext.sub_unquoted(ab, "X", "a 'q' b, a b, 'a b'") == "a 'q' b, X, 'a b'"
     assert sqltext.top_level_words("SELECT f(x) FROM t") == [
         (0, 6, "SELECT"),
         (7, 8, "F"),

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from binance_etl_clickhouse_spark.operators.etl import clean_klines
@@ -532,3 +533,31 @@ def test_update_where_rewrites_only_matching_months(spark, tmp_path):
         t.update_where(spark, pred, {"symbol": F.lit("X")})
     # no matches -> 0, no rewrite
     assert t.update_where(spark, F.col("symbol") == "NO_SUCH", {"volume": F.lit(0.0)}) == 0
+
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.mark.parametrize("rewrite", ["compact_months", "delete_where", "update_where"])
+def test_month_rewrites_leave_the_session_as_found(spark, tmp_path, rewrite):
+    """A month rewrite passes dynamic overwrite to its own write and frees
+    its lineage cut: the session conf stays unset (a later plain
+    ``partitionBy`` overwrite must still replace the whole dir) and no
+    checkpoint blocks stay behind."""
+    t = _table(tmp_path)
+    b = _clean(spark, n_symbols=2, bars_per_symbol=48, overlap_bars=0)
+    t.append(b, ingest_seq=1)
+    t.append(b.filter(F.col("symbol") == "SYM000USDT"), ingest_seq=2)
+    month = int(t.read_raw(spark).first()["month"])
+    hit = F.col("symbol") == "SYM000USDT"
+    spark.conf.unset(_OVERWRITE_MODE)
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    if rewrite == "compact_months":
+        t.compact_months(spark, [month])
+        assert t.read_raw(spark).count() == 96
+    elif rewrite == "delete_where":
+        assert t.delete_where(spark, hit) == 96
+    else:
+        assert t.update_where(spark, hit, {"volume": F.lit(-1.0)}) == 96
+    assert spark.conf.get(_OVERWRITE_MODE, None) is None
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= held

@@ -1162,7 +1162,10 @@ def test_compact_sidecar_index_merges_files_and_survives_crash(spark, tmp_path):
 
     before = spark.read.parquet(index_dir)
     expected = {tuple(r) for r in before.distinct().collect()}
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     stats = compact_sidecar_index(spark, index_dir, target_files=2)
+    # the lineage cut's blocks are released, not left to a no-op unpersist()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= held
     assert stats["files_after"] <= 2 < stats["files_before"]
     assert stats["rows"] == len(expected) == 18
     after = spark.read.parquet(index_dir)

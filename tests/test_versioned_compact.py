@@ -126,3 +126,49 @@ def test_expire_all_months_drops_versioned_table(spark, tmp_path):
     dropped = t.expire(before_month=999999)
     assert dropped
     assert not t.exists()
+
+
+def _versioned_dim(spark, tmp_path) -> ServingTable:
+    """An unpartitioned table after ``compact(versioned=True)``."""
+    t = ServingTable(path=str(tmp_path / "dim"), keys=["k"], time_col=None)
+    t.append(
+        spark.createDataFrame([(k, f"v{k}") for k in range(6)], "k int, v string"),
+        ingest_seq=1,
+    )
+    t.compact(spark, versioned=True)
+    return t
+
+
+@pytest.mark.parametrize(
+    "mutate, want",
+    [
+        ("delete_where", [(k, f"v{k}") for k in range(2, 6)]),
+        ("update_where", [(k, "x" if k < 2 else f"v{k}") for k in range(6)]),
+    ],
+)
+def test_row_mutations_commit_through_the_version_store(spark, tmp_path, mutate, want):
+    t = _versioned_dim(spark, tmp_path)
+    if mutate == "delete_where":
+        n = t.delete_where(spark, "k < 2")
+    else:
+        n = t.update_where(spark, "k < 2", {"v": "'x'"})
+    assert n == 2
+    assert os.path.islink(t.path)
+    assert sorted((r.k, r.v) for r in t.read(spark).collect()) == want
+    assert t.max_ingest_seq(spark) == 1
+
+
+def test_read_heals_a_symlinked_swap_leftover(spark, tmp_path):
+    """A whole-table swap that parked a versioned table's pointer as
+    ``.compact.bak`` and then failed to delete it: the live path holds the
+    rewritten rows as a plain dir. The next read drops the stale link
+    (its snapshot stays in the version store) and serves the live rows."""
+    t = _versioned_dim(spark, tmp_path)
+    snapshot = os.path.realpath(t.path)
+    os.rename(t.path, t.path + ".compact.bak")
+    spark.createDataFrame(
+        [(k, f"v{k}", 1) for k in range(2, 6)], "k int, v string, ingest_seq int"
+    ).write.parquet(t.path)
+    assert sorted(r.k for r in t.read(spark).collect()) == [2, 3, 4, 5]
+    assert not os.path.lexists(t.path + ".compact.bak")
+    assert os.path.isdir(snapshot)
