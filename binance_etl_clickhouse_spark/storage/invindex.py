@@ -32,15 +32,13 @@ Layout:
 Query-time scores are bit-identical to `operators/corpus.bm25_topk` over
 the raw corpus: same idf/tf-norm expressions, same rounding, same
 tie-breaks — pinned by `tests/test_invindex.py`. The index is rebuildable
-at any time (`build()` overwrites atomically via a tmp dir + rename, same
-crash-safety contract as ServingTable.compact).
+at any time: `build()` and `compact()` swap a whole new index in.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +46,7 @@ from pyspark.sql import functions as F
 from binance_etl_clickhouse_spark.operators.corpus import BM25_B, BM25_K1
 from binance_etl_clickhouse_spark.operators.parallel import ensure_min_parallelism
 from binance_etl_clickhouse_spark.operators.texthash import hash60, tokens
+from binance_etl_clickhouse_spark.storage import commit
 
 META = "_invindex_meta.json"
 TBUCKET = "tbucket"
@@ -55,7 +54,8 @@ EPOCH = "epoch"
 
 
 class InvertedIndex:
-    """Term-bucket-partitioned postings table + stats sidecar."""
+    """Term-bucket-partitioned postings table + stats sidecar. Rebuilds
+    commit, and opens recover, through ``storage/commit.py``."""
 
     def __init__(self, path: str, n_buckets: int = 64):
         self.path = path
@@ -73,35 +73,35 @@ class InvertedIndex:
 
         One explode + one (doc, term) partial-aggregated shuffle — the same
         cost as a single BM25 query over the raw corpus; every query after
-        that reads only its own term buckets. Atomic swap via tmp+rename.
+        that reads only its own term buckets. The new index replaces the
+        old one in a single swap.
         """
         stats = df.select(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.size(tokens(text_col))).alias("t"),
         ).first()
         postings = self._postings_of(df, id_col, text_col, epoch=0)
-        tmp = self.path + ".build.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._swap_in(postings, self.n_buckets, int(stats["n"] or 0), int(stats["t"] or 0))
+        return self.meta()
+
+    def _swap_in(
+        self, postings: DataFrame, n_buckets: int, n_docs: int, total_tokens: int
+    ) -> None:
+        """Write epoch-0 ``postings`` and their one-epoch sidecar aside,
+        then make them the live index in one :func:`commit.swap_dir`."""
+        staged = commit.stage_dir(self.path)
         (
             postings.repartition(TBUCKET)
             .sortWithinPartitions(TBUCKET, "term", "doc_id")
             .write.mode("overwrite")
             .partitionBy(EPOCH, TBUCKET)
-            .parquet(os.path.join(tmp, "postings"))
+            .parquet(os.path.join(staged, "postings"))
         )
-        meta = {
-            "n_buckets": self.n_buckets,
-            "epochs": {"0": {"n_docs": int(stats["n"] or 0), "total_tokens": int(stats["t"] or 0)}},
-        }
-        with open(os.path.join(tmp, META), "w") as f:
-            json.dump(meta, f)
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.path):
-            os.replace(self.path, old)
-        os.replace(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        return self.meta()
+        meta = {"n_docs": n_docs, "total_tokens": total_tokens}
+        commit.write_json(
+            os.path.join(staged, META), {"n_buckets": n_buckets, "epochs": {"0": meta}}
+        )
+        commit.swap_dir(staged, self.path)
 
     def _postings_of(
         self, df: DataFrame, id_col: str, text_col: str, epoch: int
@@ -157,10 +157,7 @@ class InvertedIndex:
             "n_docs": int(stats["n"] or 0),
             "total_tokens": int(stats["t"] or 0),
         }
-        tmp = os.path.join(self.path, META + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, os.path.join(self.path, META))
+        commit.write_json(os.path.join(self.path, META), m)
         return self.meta()
 
     def compact(self, spark: SparkSession) -> int:
@@ -168,57 +165,17 @@ class InvertedIndex:
         (and its small files) per micro-batch; compaction rewrites the
         postings from THEMSELVES — no re-tokenization of the corpus — into
         a single epoch-0 layout and collapses the sidecar stats to one
-        entry (totals unchanged). Atomic swap, same contract as build().
+        entry (totals unchanged). The same single swap as build().
         Returns the number of epochs merged."""
-        m = self._read_meta()
-        n_epochs = len(m["epochs"])
+        totals = self.meta()
+        n_epochs = len(totals["epochs"])
         if n_epochs <= 1:
             return n_epochs
         post = self.postings(spark).withColumn(EPOCH, F.lit(0).cast("long"))
-        tmp = self.path + ".compact.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            post.repartition(TBUCKET)
-            .sortWithinPartitions(TBUCKET, "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy(EPOCH, TBUCKET)
-            .parquet(os.path.join(tmp, "postings"))
+        self._swap_in(
+            post, totals["n_buckets"], totals["n_docs"], totals["total_tokens"]
         )
-        totals = self.meta()
-        meta = {
-            "n_buckets": m["n_buckets"],
-            "epochs": {
-                "0": {
-                    "n_docs": totals["n_docs"],
-                    "total_tokens": totals["total_tokens"],
-                }
-            },
-        }
-        with open(os.path.join(tmp, META), "w") as f:
-            json.dump(meta, f)
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(self.path, old)
-        os.replace(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
         return n_epochs
-
-    def _recover(self) -> None:
-        """Heal the build()/compact() two-step swap (live -> .old, tmp ->
-        live): a crash between the moves leaves the live path missing with
-        the previous index intact in ``.old``. Restoring ``.old`` is always
-        correct — for a build crash it is the pre-build index, for a
-        compact crash the pre-compact (merely uncompacted) one; either op
-        can simply be re-run. Stale tmp dirs are debris and removed. Same
-        contract as ServingTable._recover."""
-        if os.path.isfile(os.path.join(self.path, META)):
-            return
-        old = self.path + ".old"
-        if os.path.isfile(os.path.join(old, META)):
-            for tmp in (self.path + ".build.tmp", self.path + ".compact.tmp"):
-                shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(self.path, ignore_errors=True)
-            os.replace(old, self.path)
 
     def _read_meta(self, allow_missing: bool = False) -> dict:
         """Load the sidecar. ``allow_missing=True`` (append/streaming flow
@@ -226,7 +183,7 @@ class InvertedIndex:
         empty meta for a never-built path; every QUERY path keeps the
         default and raises, so a typo'd or never-built index path fails
         loudly instead of silently returning empty results."""
-        self._recover()
+        commit.recover_dir(self.path)  # heal an interrupted build/compact
         meta_path = os.path.join(self.path, META)
         if not os.path.isfile(meta_path):
             if allow_missing:
@@ -257,7 +214,7 @@ class InvertedIndex:
         }
 
     def postings(self, spark: SparkSession) -> DataFrame:
-        self._recover()
+        commit.recover_dir(self.path)  # heal an interrupted build/compact
         # an empty build writes a partition-less parquet dir Spark cannot
         # infer a schema from — surface it as a typed empty frame instead
         try:

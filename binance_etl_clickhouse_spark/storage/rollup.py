@@ -32,7 +32,6 @@ to keep warm instead of O(table) to run cold.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -43,6 +42,7 @@ from pyspark.sql import functions as F
 from binance_etl_clickhouse_spark.functions.scalars import month_bucket
 from binance_etl_clickhouse_spark.operators.dedup import keep_last
 from binance_etl_clickhouse_spark.schemas import MONTH_COL
+from binance_etl_clickhouse_spark.storage.commit import read_json, write_json
 from binance_etl_clickhouse_spark.storage.table import (
     INGEST_SEQ,
     ServingTable,
@@ -168,15 +168,8 @@ class RollupTable:
         return os.path.join(self.path, _META)
 
     def _meta(self) -> dict:
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return read_json(self._meta_path()) or {}
 
     def _write_meta(self, meta: dict) -> None:
         os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path())
+        write_json(self._meta_path(), meta)

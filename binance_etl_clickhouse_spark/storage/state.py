@@ -14,7 +14,6 @@ trusted only while the serving table's state token is unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -22,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_etl_clickhouse_spark.schemas import PROGRESS
+from binance_etl_clickhouse_spark.storage.commit import read_json, write_json
 
 
 @dataclass
@@ -61,11 +61,7 @@ class WatermarkState:
     path: str
 
     def load(self, token: list | None) -> dict[str, int] | None:
-        try:
-            with open(self.path) as f:
-                state = json.load(f)
-        except (OSError, ValueError):
-            return None
+        state = read_json(self.path)
         if not isinstance(state, dict) or state.get("token") != token:
             return None
         last_ms = state.get("last_ms")
@@ -73,7 +69,4 @@ class WatermarkState:
 
     def save(self, token: list | None, last_ms: dict[str, int]) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"token": token, "last_ms": last_ms}, f)
-        os.replace(tmp, self.path)
+        write_json(self.path, {"token": token, "last_ms": last_ms})

@@ -28,33 +28,19 @@ from pyspark.sql import functions as F
 from binance_etl_clickhouse_spark.functions.scalars import month_bucket
 from binance_etl_clickhouse_spark.operators.dedup import keep_last
 from binance_etl_clickhouse_spark.schemas import MONTH_COL
+from binance_etl_clickhouse_spark.storage import commit
 
 INGEST_SEQ = "ingest_seq"
 SEQ_SIDECAR = "_seq.json"  # leading "_" -> invisible to Spark's parquet reader
-#: siblings of a table's path: a whole-table rewrite's staging dir, the
-#: live dir parked during its swap, a versioned table's snapshot store and
-#: the symlink staged for its commit rename
-_SWAP_TMP, _SWAP_BAK, _VERSIONS, _LINK_TMP = (
-    ".compact.tmp", ".compact.bak", ".versions", ".lnk.tmp"
-)
-
-
-def _remove(p: str) -> None:
-    """Delete the tree at ``p``, or only the link when ``p`` is a symlink
-    (a versioned table's pointer: ``rmtree`` refuses links). A missing
-    ``p`` is a no-op."""
-    if os.path.islink(p):
-        os.remove(p)
-    else:
-        shutil.rmtree(p, ignore_errors=True)
+_VERSIONS = ".versions"  # sibling of a table's path: its snapshot store
 
 
 def drop_storage(path: str) -> None:
     """Remove a table's data dir, its version store (or crash recovery would
     resurrect a parked snapshot of a deliberately dropped table) and any
     swap debris."""
-    for suffix in ("", _VERSIONS, _SWAP_BAK, _SWAP_TMP, _LINK_TMP):
-        _remove(path.rstrip("/") + suffix)
+    commit.remove(path.rstrip("/") + _VERSIONS)
+    commit.discard(path)
 
 
 def expire_month_partitions(path: str, before_month: int) -> list[int]:
@@ -117,26 +103,13 @@ class ServingTable:
 
     # -- crash recovery ---------------------------------------------------
 
-    def _sibling(self, suffix: str) -> str:
-        return self.path.rstrip("/") + suffix
-
     def _recover(self) -> None:
-        """Heal an interrupted whole-table swap (:meth:`_commit`).
-
-        The swap is live -> .bak, tmp -> live, rm .bak. A crash between the
-        two moves leaves the live path missing with a complete .bak (and
-        possibly a complete tmp). Recovery restores the .bak — the
-        pre-rewrite state, which is always safe because a rewrite only
-        replaces existing data. Leftover tmp/bak debris from completed swaps
-        is cleared; a symlinked .bak (a versioned table's pointer) loses
-        only the link, its snapshot stays in the version store.
-        """
-        bak, tmp = self._sibling(_SWAP_BAK), self._sibling(_SWAP_TMP)
-        if not os.path.isdir(self.path) and os.path.isdir(bak):
-            shutil.move(bak, self.path)
-        # versioned-swap conversion crash: live dir moved into the version
-        # store but the symlink never landed -> restore the moved dir
-        if not os.path.isdir(self.path) and not os.path.islink(self.path):
+        """Heal an interrupted :meth:`_commit`: a whole-table swap through
+        ``storage/commit.py``'s :func:`~commit.recover_dir`, or a versioned
+        conversion that moved the live dir into the version store before
+        the symlink landed (the moved dir is restored)."""
+        commit.recover_dir(self.path)
+        if not os.path.lexists(self.path):
             vroot = self._versions_root()
             if os.path.isdir(vroot):
                 legacy = sorted(
@@ -144,15 +117,11 @@ class ServingTable:
                 )
                 if legacy:
                     shutil.move(os.path.join(vroot, legacy[-1]), self.path)
-        if os.path.isdir(self.path):
-            # live dir resolves -> any leftover swap debris is stale
-            for d in (bak, tmp):
-                _remove(d)
 
     # -- versioned layout (atomic compact swap) ---------------------------
 
     def _versions_root(self) -> str:
-        return self._sibling(_VERSIONS)
+        return self.path.rstrip("/") + _VERSIONS
 
     def resolved_path(self) -> str:
         """Physical data dir with the version symlink resolved. DataFrames
@@ -189,37 +158,25 @@ class ServingTable:
     def _sidecar_path(self) -> str:
         return os.path.join(self.path, SEQ_SIDECAR)
 
-    def _read_sidecar(self) -> int | None:
-        import json
-
+    def _read_seqs(self) -> tuple[int | None, int | None]:
+        """``(max_ingest_seq, compacted_seq)`` from the sidecar, each None
+        when absent. ``compacted_seq`` is the seq at which the WHOLE table
+        was last compacted to one version per key; appends clear it."""
+        meta = commit.read_json(self._sidecar_path())
         try:
-            with open(self._sidecar_path()) as f:
-                return int(json.load(f)["max_ingest_seq"])
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _read_compacted_seq(self) -> int | None:
-        """Seq at which the WHOLE table was last compacted to one version
-        per key, or None if appends happened since (or never compacted)."""
-        import json
-
-        try:
-            with open(self._sidecar_path()) as f:
-                v = json.load(f).get("compacted_seq")
-            return int(v) if v is not None else None
-        except (OSError, ValueError):
-            return None
+            compacted = meta.get("compacted_seq")
+            return (
+                int(meta["max_ingest_seq"]),
+                None if compacted is None else int(compacted),
+            )
+        except (AttributeError, KeyError, TypeError, ValueError):
+            return None, None
 
     def _write_sidecar(self, max_seq: int, compacted_seq: int | None = None) -> None:
-        import json
-
         meta: dict = {"max_ingest_seq": int(max_seq)}
         if compacted_seq is not None:
             meta["compacted_seq"] = int(compacted_seq)
-        tmp = self._sidecar_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._sidecar_path())
+        commit.write_json(self._sidecar_path(), meta)
 
     def max_ingest_seq(self, spark: SparkSession) -> int:
         """Highest version stamp ever appended (0 for an empty table).
@@ -230,7 +187,7 @@ class ServingTable:
         """
         if not self.exists():
             return 0
-        cached = self._read_sidecar()
+        cached = self._read_seqs()[0]
         if cached is not None:
             return cached
         row = self.read_raw(spark).agg(F.max(INGEST_SEQ).alias("m")).first()
@@ -279,7 +236,7 @@ class ServingTable:
         # footer max BEFORE this write, not from this batch's seq — else a
         # low ingest_seq would understate max forever and keep-last dedup
         # would prefer stale rows
-        prior = self._read_sidecar()
+        prior = self._read_seqs()[0]
         if prior is None and self.exists():
             row = self.read_raw(df.sparkSession).agg(F.max(INGEST_SEQ).alias("m")).first()
             prior = int(row.m or 0)
@@ -380,8 +337,8 @@ class ServingTable:
         # version per key on disk and records it in the sidecar; until the
         # next append the keep-last window (a whole shuffle) is a no-op and
         # is skipped. Appends and per-month compacts clear the flag.
-        compacted = self._read_compacted_seq()
-        if compacted is not None and self._read_sidecar() == compacted:
+        seq, compacted = self._read_seqs()
+        if compacted is not None and seq == compacted:
             return raw
         return keep_last(raw, self.keys, INGEST_SEQ)
 
@@ -550,8 +507,9 @@ class ServingTable:
         ``months=None`` replaces the whole table. ``w`` lands in a fresh
         dir: a new ``<path>.versions/vNNN`` behind one atomic symlink
         rename when the table is versioned (``versioned=None`` keeps the
-        table's layout), else ``<path>.compact.tmp`` swapped in through
-        ``.compact.bak``. With ``months``, only those month partitions are
+        table's layout), else a staging dir swapped in whole. Both commits
+        and their crash recovery are ``storage/commit.py``'s. With
+        ``months``, only those month partitions are
         rewritten, in place, by a dynamic partition overwrite — every other
         month's files stay untouched bytes — and a listed month that ``w``
         holds no rows for is removed (dynamic overwrite cannot replace a
@@ -566,7 +524,7 @@ class ServingTable:
         from binance_etl_clickhouse_spark import checkpoints
         from binance_etl_clickhouse_spark.storage import zonemap as _zm
 
-        seq, compacted = self._read_sidecar(), self._read_compacted_seq()
+        seq, compacted = self._read_seqs()
         prior_zm = _zm.read_zonemap(self.path)
         if months is None:
             if versioned is None:
@@ -581,7 +539,7 @@ class ServingTable:
                 ]
                 target = os.path.join(vroot, f"v{max(nums, default=0) + 1:09d}")
             else:
-                target = self._sibling(_SWAP_TMP)
+                target = commit.stage_dir(self.path)
             writer = w.write.mode("overwrite")
             (writer.partitionBy(MONTH_COL) if self.time_col else writer).parquet(target)
             if versioned:
@@ -593,17 +551,9 @@ class ServingTable:
                         self.path,
                         os.path.join(vroot, f"legacy-{os.path.basename(target)}"),
                     )
-                link = self._sibling(_LINK_TMP)
-                _remove(link)
-                os.symlink(target, link)
-                os.replace(link, self.path)  # THE commit: one atomic rename
+                commit.swap_link(target, self.path)
             else:
-                # single-FS rename swap; the versioned layout is the fully
-                # atomic form
-                bak = self._sibling(_SWAP_BAK)
-                shutil.move(self.path, bak)
-                shutil.move(target, self.path)
-                _remove(bak)
+                commit.swap_dir(target, self.path)
         else:
             month_dirs = [os.path.join(self.path, f"{MONTH_COL}={m}") for m in months]
             before = {d: set(os.listdir(d)) for d in month_dirs if os.path.isdir(d)}

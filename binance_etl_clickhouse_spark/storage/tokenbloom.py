@@ -29,13 +29,13 @@ bigger ``m`` (cost is sidecar bytes, build plan unchanged).
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_etl_clickhouse_spark.operators.texthash import hash60, tokens
+from binance_etl_clickhouse_spark.storage.commit import read_json, write_json
 from binance_etl_clickhouse_spark.storage.zonemap import data_files
 
 TOKENBLOOM_SIDECAR = "_tokenbloom.json"  # leading "_" -> invisible to Spark
@@ -116,22 +116,15 @@ def build_token_bloom(
         words = per_file.setdefault(rel, [0] * n_words)
         words[r.word_idx] |= r.word & _U64
     idx = {"text_col": text_col, "m": m, "k": k, "files": per_file}
-    tmp = os.path.join(table_path, TOKENBLOOM_SIDECAR + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(idx, f)
-    os.replace(tmp, os.path.join(table_path, TOKENBLOOM_SIDECAR))
+    write_json(os.path.join(table_path, TOKENBLOOM_SIDECAR), idx)
     return idx
 
 
 def read_token_bloom(table_path: str) -> dict | None:
-    try:
-        with open(os.path.join(table_path, TOKENBLOOM_SIDECAR)) as f:
-            idx = json.load(f)
-        if not isinstance(idx.get("files"), dict) or "m" not in idx or "k" not in idx:
-            return None
-        return idx
-    except (OSError, ValueError):
+    idx = read_json(os.path.join(table_path, TOKENBLOOM_SIDECAR))
+    if idx is None or not isinstance(idx.get("files"), dict) or "m" not in idx or "k" not in idx:
         return None
+    return idx
 
 
 #: prune-benefit bail-out (r10 verdict item 5): when the bloom keeps more

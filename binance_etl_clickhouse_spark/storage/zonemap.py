@@ -27,10 +27,11 @@ lower lower-bound, truncate+increment keeps an upper upper-bound).
 
 from __future__ import annotations
 
-import json
 import os
 from datetime import date, datetime, timezone
 from typing import Any
+
+from binance_etl_clickhouse_spark.storage.commit import read_json, write_json
 
 ZONEMAP_SIDECAR = "_zonemap.json"  # leading "_" -> invisible to Spark's reader
 
@@ -108,21 +109,14 @@ def build_zonemap(table_path: str, columns: list[str]) -> dict:
 
 
 def write_zonemap(table_path: str, zm: dict) -> None:
-    tmp = os.path.join(table_path, ZONEMAP_SIDECAR + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(zm, f)
-    os.replace(tmp, os.path.join(table_path, ZONEMAP_SIDECAR))
+    write_json(os.path.join(table_path, ZONEMAP_SIDECAR), zm)
 
 
 def read_zonemap(table_path: str) -> dict | None:
-    try:
-        with open(os.path.join(table_path, ZONEMAP_SIDECAR)) as f:
-            zm = json.load(f)
-        if not isinstance(zm.get("files"), dict) or "columns" not in zm:
-            return None
-        return zm
-    except (OSError, ValueError):
+    zm = read_json(os.path.join(table_path, ZONEMAP_SIDECAR))
+    if zm is None or not isinstance(zm.get("files"), dict) or "columns" not in zm:
         return None
+    return zm
 
 
 def extend_zonemap(table_path: str, new_files: list[str]) -> dict | None:

@@ -21,23 +21,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from binance_etl_clickhouse_spark.storage import commit
 from binance_etl_clickhouse_spark.storage.table import ServingTable
 
 
 def recover_sidecar_index(index_dir: str) -> bool:
     """Heal a sidecar index left mid-swap by a crashed
-    :func:`compact_sidecar_index`: if the backup dir exists and the live
-    dir does not, the crash hit between the two renames — restore the
-    backup. Returns True if a recovery happened. Called by the streaming
-    sinks before they probe the index so a crashed compaction can never
-    silently present as an empty index (which would re-admit duplicates)."""
-    import os
-
-    bak = index_dir.rstrip("/") + ".compact.bak"
-    if os.path.isdir(bak) and not os.path.isdir(index_dir):
-        os.rename(bak, index_dir)
-        return True
-    return False
+    :func:`compact_sidecar_index` (:func:`commit.recover_dir`). Returns
+    True if the parked index was restored. Called by the streaming sinks
+    before they probe the index so a crashed compaction can never silently
+    present as an empty index (which would re-admit duplicates)."""
+    return commit.recover_dir(index_dir)
 
 
 def compact_sidecar_index(
@@ -60,14 +54,12 @@ def compact_sidecar_index(
     anti-joined so dups are rare, but a crash inside a heal can leave
     identical rows — identical, so keep-any is exact).
 
-    Crash-safe swap: snapshot -> ``.compact.tmp``; live -> ``.compact.bak``;
-    tmp -> live; drop bak. The only unsafe window (live dir absent) is
-    between the two renames and is healed by :func:`recover_sidecar_index`,
-    which every consumer runs before probing. Returns
+    The rewrite is written aside and swapped in whole by
+    ``storage/commit.py``; :func:`recover_sidecar_index`, which every
+    consumer runs before probing, heals an interrupted swap. Returns
     ``{files_before, files_after, rows}``.
     """
     import os
-    import shutil
 
     from binance_etl_clickhouse_spark.checkpoints import release as release_ckpt
 
@@ -90,15 +82,10 @@ def compact_sidecar_index(
     out = out.localCheckpoint(eager=True)
     rows = out.count()
     tgt = target_files or spark.sparkContext.defaultParallelism
-    tmp = index_dir.rstrip("/") + ".compact.tmp"
-    bak = index_dir.rstrip("/") + ".compact.bak"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
-    out.coalesce(tgt).write.mode("overwrite").parquet(tmp)
+    staged = commit.stage_dir(index_dir)
+    out.coalesce(tgt).write.mode("overwrite").parquet(staged)
     release_ckpt(out)
-    os.rename(index_dir, bak)
-    os.rename(tmp, index_dir)
-    shutil.rmtree(bak)
+    commit.swap_dir(staged, index_dir)
     return {"files_before": files_before, "files_after": _nfiles(index_dir), "rows": rows}
 
 

@@ -133,6 +133,24 @@ def test_sql_text_is_lexed_only_in_sqltext():
     assert not offenders, "SQL scanning outside sqltext:\n" + "\n".join(offenders)
 
 
+def test_storage_renames_only_in_commit():
+    """One crash-safe commit protocol: ``storage/commit.py`` alone renames
+    and spells the swap and tmp suffixes. A private tmp + rename elsewhere
+    is a second copy of the protocol with its own recovery rules (two
+    copies already left the previous index parked after a completed swap)."""
+    pattern = re.compile(r"""os\.(replace|rename)\(|\.(tmp|bak|old)["']""")
+    offenders = []
+    for path in _py_files():
+        if path.relative_to(PKG).as_posix() == "storage/commit.py":
+            continue
+        for lineno, line in _code_lines(path):
+            if pattern.search(line):
+                offenders.append(f"{path.relative_to(PKG)}:{lineno}: {line.strip()}")
+    assert not offenders, "rename or swap suffix outside storage/commit.py:\n" + "\n".join(
+        offenders
+    )
+
+
 def test_overwrite_mode_is_passed_per_write():
     """Dynamic partition overwrite is a per-write option. Set on the
     session conf it outlives the write (a save/restore skips the restore

@@ -561,3 +561,142 @@ def test_month_rewrites_leave_the_session_as_found(spark, tmp_path, rewrite):
         assert t.update_where(spark, hit, {"volume": F.lit(-1.0)}) == 96
     assert spark.conf.get(_OVERWRITE_MODE, None) is None
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= held
+
+
+# -- crash-safe commits (storage/commit.py) ---------------------------------
+
+_SWAP_SIBLINGS = (".compact.tmp", ".compact.bak", ".old", ".build.tmp")
+_DOCS = "doc_id long, text string"
+
+
+def _index_docs(spark, lo, hi):
+    return spark.createDataFrame(
+        [(i, f"w{i % 3} w{i % 5} common") for i in range(lo, hi)], _DOCS
+    )
+
+
+def _index_state(spark, idx):
+    from binance_etl_clickhouse_spark.storage.invindex import InvertedIndex
+
+    fresh = InvertedIndex(idx.path, n_buckets=idx.n_buckets)
+    m = fresh.meta()  # the next open: heals an interrupted swap first
+    rows = fresh.postings(spark).select("doc_id", "term", "tf", "epoch")
+    return m["n_docs"], m["total_tokens"], len(m["epochs"]), sorted(map(tuple, rows.collect()))
+
+
+def _crash_case(spark, kind, path):
+    """(setup, op, observe) over tiny inputs at ``path``: ``observe`` is the
+    next open of the stored state, returning its rows."""
+    from binance_etl_clickhouse_spark.storage.invindex import InvertedIndex
+    from binance_etl_clickhouse_spark.streaming.jobs import (
+        compact_sidecar_index,
+        recover_sidecar_index,
+    )
+
+    if kind == "ServingTable.compact":
+        t = ServingTable(path=path, keys=KLINES_PK, time_col="timestamp")
+
+        def setup():
+            b = _clean(spark, n_symbols=1, bars_per_symbol=6, overlap_bars=0)
+            t.append(b, ingest_seq=1)
+            t.append(b.withColumn("volume", F.col("volume") * 2), ingest_seq=2)
+
+        return setup, lambda: t.compact(spark), lambda: sorted(
+            map(tuple, ServingTable(path, KLINES_PK, "timestamp").read_raw(spark).collect())
+        )
+    if kind.startswith("InvertedIndex"):
+        idx = InvertedIndex(path, n_buckets=4)
+
+        def setup():
+            idx.build(_index_docs(spark, 0, 6))
+            if kind == "InvertedIndex.compact":
+                idx.append(_index_docs(spark, 6, 9))
+
+        if kind == "InvertedIndex.build":
+            op = lambda: idx.build(_index_docs(spark, 0, 9))  # noqa: E731
+        else:
+            op = lambda: idx.compact(spark)  # noqa: E731
+        return setup, op, lambda: _index_state(spark, idx)
+
+    def setup():
+        rows = [(i, i * 7) for i in range(6)] + [(0, 0)]  # one exact duplicate
+        for part in (rows[:3], rows[3:]):
+            spark.createDataFrame(part, "k long, h long").write.mode("append").parquet(path)
+
+    def observe():
+        recover_sidecar_index(path)
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    return setup, lambda: compact_sidecar_index(spark, path, target_files=1), observe
+
+
+@pytest.mark.parametrize("fault", ["swap_rename", "bak_removal"])
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "ServingTable.compact",
+        "InvertedIndex.build",
+        "InvertedIndex.compact",
+        "compact_sidecar_index",
+    ],
+)
+def test_interrupted_swap_opens_to_old_or_new_state(spark, tmp_path, monkeypatch, kind, fault):
+    """Every whole-dir rewrite commits through ``commit.swap_dir``. A crash
+    at its second rename (staged -> live) or at the removal of the parked
+    bak after it must leave a state the next open recovers to exactly the
+    old or the new rows, never neither, and with no swap sibling left."""
+    from binance_etl_clickhouse_spark.storage import commit
+
+    setup, op, observe = _crash_case(spark, kind, str(tmp_path / "ref"))
+    setup()
+    old = observe()
+    op()
+    new = observe()
+    assert old != new
+
+    setup, op, observe = _crash_case(spark, kind, str(tmp_path / "crash"))
+    setup()
+    real_rename, real_remove = commit._rename, commit.remove
+
+    def rename(src, dst):
+        if fault == "swap_rename" and src.endswith(commit.TMP):
+            raise OSError("injected crash at the swap rename")
+        real_rename(src, dst)
+
+    def remove(p):
+        if fault == "bak_removal" and p.endswith(commit.BAK) and os.path.lexists(p):
+            raise OSError("injected crash removing the parked bak")
+        real_remove(p)
+
+    with monkeypatch.context() as m:
+        m.setattr(commit, "_rename", rename)
+        m.setattr(commit, "remove", remove)
+        with pytest.raises(OSError, match="injected"):
+            op()
+    got = observe()
+    if fault == "swap_rename":
+        assert got in (old, new)
+    else:
+        assert got == new
+    live = str(tmp_path / "crash")
+    assert os.path.isdir(live)
+    assert not [s for s in _SWAP_SIBLINGS if os.path.lexists(live + s)]
+
+
+def test_write_json_keeps_the_previous_file_when_the_dump_fails(tmp_path, monkeypatch):
+    from binance_etl_clickhouse_spark.storage import commit
+
+    path = str(tmp_path / "_meta.json")
+    commit.write_json(path, {"seq": 1, "files": ["a", "b"]})
+    before = open(path, "rb").read()
+
+    def torn_dump(obj, f):
+        f.write('{"seq": 2, "fi')
+        raise RuntimeError("disk full")
+
+    monkeypatch.setattr(commit.json, "dump", torn_dump)
+    with pytest.raises(RuntimeError, match="disk full"):
+        commit.write_json(path, {"seq": 2, "files": []})
+    monkeypatch.undo()
+    assert open(path, "rb").read() == before
+    assert commit.read_json(path) == {"seq": 1, "files": ["a", "b"]}
